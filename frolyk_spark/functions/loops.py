@@ -59,6 +59,9 @@ def loop_partitions(spark: SparkSession, big_bytes: int = 0) -> int:
       starving cores — measured at sf0.1/local[32]: 16 partitions ~= 8,
       both ~1.5x faster than 32 (each loop stage is a wave of
       milliseconds-sized tasks; fewer tasks, shorter straggler tail).
+      A lowered session setting caps the count but does not guarantee
+      it: on fewer than twice that many cores the core half wins (a
+      foreachBatch pin of 4 yields 2 at ``local[4]``).
 
     ``SPARK_GRAFT_LOOP_PARTS`` overrides for cluster tuning.
     """

@@ -40,11 +40,17 @@ def test_loop_partitions_core_floor_and_bytes_term(spark):
 
 
 def test_loop_partitions_respects_lowered_session_setting(spark):
-    # a streaming foreachBatch body that pinned partitions=4 must keep 4
+    # a streaming foreachBatch body pins partitions=4: that pin is a
+    # ceiling. It is kept exactly when the core half (cores // 2) is at
+    # least 4; on fewer cores the documented core half applies instead.
+    cores = spark.sparkContext.defaultParallelism
+    half = max(1, cores // 2)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        assert loop_partitions(spark, 0) == 4
+        got = loop_partitions(spark, 0)
+        assert got <= 4
+        assert got == (4 if half >= 4 else half)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
