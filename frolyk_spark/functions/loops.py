@@ -62,6 +62,10 @@ def loop_partitions(spark: SparkSession, big_bytes: int = 0) -> int:
       A lowered session setting caps the count but does not guarantee
       it: on fewer than twice that many cores the core half wins (a
       foreachBatch pin of 4 yields 2 at ``local[4]``).
+    - the count is never below 2: at one partition ``repartition(1, key)``
+      plans as SinglePartition, which a hash-partitioned round join does
+      not accept, so every round would pay a second exchange (below 4
+      cores this floor replaces the core half).
 
     ``SPARK_GRAFT_LOOP_PARTS`` overrides for cluster tuning.
     """
@@ -70,7 +74,7 @@ def loop_partitions(spark: SparkSession, big_bytes: int = 0) -> int:
         return max(1, int(env))
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
-    return max(min(cur, max(1, cores // 2)), int(big_bytes // LOOP_PARTITION_BYTES), 1)
+    return max(min(cur, cores // 2), int(big_bytes // LOOP_PARTITION_BYTES), 2)
 
 
 @contextmanager

@@ -892,6 +892,11 @@ def min_label_propagation(
     the neighbor-min aggregate transport, at any scale."""
     from frolyk_spark.functions.loops import fixed_plan_loop
 
+    if max_iters < 1:
+        # the lazy edge cut below is materialized by round 1's fixpoint
+        # count, which must run INSIDE fixed_plan_loop; with no round it
+        # would materialize later, under whatever conf the caller has
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     spark = pairs.sparkSession
     with fixed_plan_loop(spark, big_bytes=big_bytes) as nparts:
         if symmetric:

@@ -56,38 +56,42 @@ PR_ROUNDS = 8
 PR_TOP_K = 50
 
 
+def basket_half_join(li: DataFrame) -> DataFrame:
+    """THE basket self-join: co-purchase HALF-edges (src < dst) from a
+    (l_orderkey, l_partkey) frame, one row per (order, pair) — NOT
+    distinct. Shuffles ONCE on the order key; per-order fan-out is bounded
+    by basket size (TPC-H orders hold <=7 lines), so the output is
+    O(rows x basket), never quadratic in the corpus. A consumer that
+    re-distincts downstream anyway (stream_components' contraction) uses
+    it bare and skips the pair-distinct shuffle."""
+    dli = li.select("l_orderkey", "l_partkey").distinct()
+    a, b = dli.alias("a"), dli.alias("b")
+    return a.join(b, "l_orderkey").where(
+        F.col("a.l_partkey") < F.col("b.l_partkey")
+    ).select(
+        F.col("a.l_partkey").alias("src"),
+        F.col("b.l_partkey").alias("dst"),
+    )
+
+
 def basket_half_pairs(li: DataFrame, *, weighted: bool = False) -> DataFrame:
     """THE basket-pair kernel (r15, factored from six inline copies — the
     r14 deferred self-review finding): distinct co-purchase HALF-edges
-    (src < dst) from a (l_orderkey, l_partkey) frame. The basket
-    self-join shuffles ONCE on the order key; per-order fan-out is
-    bounded by basket size (TPC-H orders hold <=7 lines), so the join
-    output is O(rows x basket), never quadratic in the corpus.
+    (src < dst) over basket_half_join.
 
     ``weighted=True`` returns (src, dst, w) where w = the number of
     distinct orders containing both parts (count over the pair groupBy
     replacing the distinct — the C74 edge-mass form); both variants are
     ONE expression so the unweighted edge set and the weighted one can
     never drift. Callers that need both directions symmetrize with
-    ``symmetric_edges``; the streaming per-batch builders (B34/B36)
-    consume the half-edge form directly."""
-    dli = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = dli.alias("a"), dli.alias("b")
-    joined = a.join(b, "l_orderkey").where(
-        F.col("a.l_partkey") < F.col("b.l_partkey")
-    )
+    ``symmetric_edges``; B34's per-batch builder consumes the half-edge
+    form directly."""
+    joined = basket_half_join(li)
     if weighted:
-        return joined.groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    return (
-        joined.select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
+        return joined.groupBy("src", "dst").agg(
+            F.count(F.lit(1)).cast("bigint").alias("w")
         )
-        .distinct()
-    )
+    return joined.distinct()
 
 
 def symmetric_edges(pairs: DataFrame, *, carry: tuple[str, ...] = ()) -> DataFrame:

@@ -29,11 +29,22 @@ only at the next process's run (each is a potentially-live reader).
 
 The file-stream source needs a *directory*; single-file tables are staged
 as a symlink under .scratch/streams (no data copy).
+
+Every foreachBatch operator runs through ONE lifecycle, ``run_batches``
+(the shuffle-partition pin, the checkpoint, the availableNow start/await,
+checkpoint cleanup, named-run resume), and keeps its cross-batch state in
+ONE store, ``VersionedState`` (version naming, the strictly-below
+``prior(batch_id)`` redelivery rule, parquet and atomically-renamed
+one-scalar versions, keep >= 2 retention). An operator supplies only its
+per-batch body and its final read — the frolyk Task shape, where the
+framework owns assignment, commits and restart and the caller supplies
+the processor.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -141,8 +152,6 @@ def _sweep_named(parent: str, cutoff: float) -> None:
     have started without one) AND the recovery window passed; orphan
     .owner_pid files whose dir is already gone are reclaimed by their own
     mtime."""
-    import shutil
-
     for sub in os.listdir(parent):
         sp = os.path.join(parent, sub)
         if ".owner_pid.tmp-" in sub:
@@ -188,13 +197,63 @@ def _sweep_named(parent: str, cutoff: float) -> None:
                 pass
 
 
+def _run_root(prefix: str, name: str | None = None) -> tuple[str, str]:
+    """(run name, result root) of one streaming run. Anonymous runs get a
+    uuid name under this process's pid root, registered as live so the
+    janitor never reclaims it under a lazy reader; a NAMED resumable run
+    keys its root by name through _named_dir, so a different process can
+    find the committed batches after a crash."""
+    if name is not None:
+        return name, _named_dir("results", name)
+    name = f"{prefix}{uuid.uuid4().hex[:8]}"
+    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
+    _LIVE_RESULTS.add(root)
+    return name, root
+
+
+def _sweep_results() -> None:
+    """Reclaim dead result roots. Results can't be deleted eagerly (a
+    returned DataFrame reads them lazily), and an mtime cutoff can delete
+    under a live reader in a session spanning the cutoff, so results are
+    scoped per PROCESS: sibling pid roots go once their owner is dead,
+    named roots through the owner-pid-guarded _sweep_named, and legacy
+    flat dirs (pre-pid layout) by mtime."""
+    import time as _time
+
+    parent = os.path.join(SCRATCH, "results")
+    if not os.path.isdir(parent):
+        return
+    own = os.path.join(parent, f"pid{os.getpid()}")
+    cutoff = _time.time() - 3600
+    for d in os.listdir(parent):
+        p = os.path.join(parent, d)
+        try:
+            if p == own:
+                # our own root: reclaim only dirs this process did NOT
+                # create — leftovers from a dead process that was assigned
+                # our pid. Dirs we created stay until process exit: each
+                # is a potentially-live lazy reader.
+                for sub in os.listdir(p):
+                    sp = os.path.join(p, sub)
+                    if sp not in _LIVE_RESULTS:
+                        shutil.rmtree(sp, ignore_errors=True)
+            elif d.startswith("pid") and d[3:].isdigit():
+                if not _pid_alive(int(d[3:])):
+                    shutil.rmtree(p, ignore_errors=True)
+            elif d == "named":
+                _sweep_named(p, cutoff)
+            elif os.path.getmtime(p) < cutoff:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass
+
+
 def _sweep_checkpoints() -> None:
     """Reclaim dead checkpoint dirs (SIGKILLed runs leak them — the finally
     blocks delete on every normal exit). pid roots go when their owner
     dies; named resumable dirs go through the owner-pid-guarded
     _sweep_named; legacy flat names (pre-pid layout) keep the mtime-only
     fallback."""
-    import shutil
     import time as _time
 
     parent = os.path.join(SCRATCH, "checkpoints")
@@ -255,6 +314,152 @@ def _stop_when_idle(
     query.awaitTermination()
 
 
+def _check_keep(keep: int | None) -> None:
+    """keep < 2 would vacuum the redelivery anchor: Spark replays at most
+    the last uncommitted batch, whose predecessor must survive or the
+    rebuild resets all state to that batch alone (keep=0 would also be a
+    silent no-op of the slicing)."""
+    if keep is not None and keep < 2:
+        raise ValueError(
+            f"keep_versions must be >= 2 (redelivery anchor), got {keep}"
+        )
+
+
+class VersionedState:
+    """Per-batch versioned state under ``root`` — THE cross-batch store of
+    every foreachBatch operator. Version ``v`` is ``root/{prefix}{v}``: a
+    parquet dir (``write``; ``side=`` partitions when written by side) or
+    a one-scalar text file ``{prefix}{v}.txt`` (``write_scalar``,
+    atomically renamed — a scalar doesn't earn a parquet job per batch).
+
+    foreachBatch is at-least-once: after a crash between the body and the
+    offset commit Spark re-runs the last batch under the same id. Every
+    batch therefore writes its OWN version (a redelivery overwrites it)
+    and reads only versions STRICTLY below its id (``prior``/``versions
+    (below=...)``) — never its own or a successor's output, so retries
+    never double-count. ``keep`` bounds the lineage to the newest ``keep``
+    versions after each write (>= 2 keeps the redelivery anchor)."""
+
+    def __init__(self, root: str, *, prefix: str = "s", keep: int | None = None):
+        _check_keep(keep)
+        self.root, self.prefix, self.keep = root, prefix, keep
+
+    def path(self, v: int, side: str | None = None) -> str:
+        p = os.path.join(self.root, f"{self.prefix}{v}")
+        return p if side is None else os.path.join(p, f"side={side}")
+
+    def versions(self, *, below: int | None = None, side: str | None = None) -> list[int]:
+        """Committed version ids, ascending; ``side`` keeps only versions
+        that carry that partition."""
+        n = len(self.prefix)
+        found = set()
+        for f in os.listdir(self.root) if os.path.isdir(self.root) else []:
+            stem = f.removesuffix(".txt")
+            if stem.startswith(self.prefix) and stem[n:].isdigit():
+                v = int(stem[n:])
+                if (below is None or v < below) and (
+                    side is None or os.path.isdir(self.path(v, side))
+                ):
+                    found.add(v)
+        return sorted(found)
+
+    def prior(self, batch_id: int, side: str | None = None) -> int | None:
+        """Latest version strictly below ``batch_id`` (the redelivery
+        anchor), or None for the first batch."""
+        vs = self.versions(below=batch_id, side=side)
+        return vs[-1] if vs else None
+
+    def latest(self, side: str | None = None) -> int | None:
+        vs = self.versions(side=side)
+        return vs[-1] if vs else None
+
+    def paths(self, side: str, *, below: int | None = None) -> list[str]:
+        """The ``side=`` dirs of every (or every strictly-below) version."""
+        return [self.path(v, side) for v in self.versions(below=below, side=side)]
+
+    def write(self, batch_id: int, df: DataFrame, *, by_side: bool = False) -> None:
+        w = df.write.mode("overwrite")
+        if by_side:
+            w = w.partitionBy("side")
+        w.parquet(self.path(batch_id))
+        if self.keep is not None:
+            # retention AFTER the commit: the just-written version is the
+            # newest, so its predecessor survives any keep >= 2
+            for v in self.versions()[: -self.keep]:
+                shutil.rmtree(self.path(v), ignore_errors=True)
+
+    def write_scalar(self, batch_id: int, value: int) -> None:
+        os.makedirs(self.root, exist_ok=True)
+        dst = self.path(batch_id) + ".txt"
+        tmp = f"{dst}.tmp-{os.getpid()}"
+        with open(tmp, "w") as fh:
+            fh.write(str(int(value)))
+        os.replace(tmp, dst)
+
+    def scalar(self, v: int) -> int:
+        with open(self.path(v) + ".txt") as fh:
+            return int(fh.read())
+
+
+def run_batches(
+    stream: DataFrame, apply, *, name: str, resume: bool = False,
+    mode: str = "append", stop_on_idle: int | None = None,
+    drain_state: bool = True,
+) -> None:
+    """THE foreachBatch lifecycle: run ``stream`` to completion
+    (availableNow) calling ``apply(batch_df, batch_id)`` per micro-batch.
+    ``apply`` must be idempotent per batch_id (foreachBatch is
+    at-least-once — see VersionedState).
+
+    The state-store partition count is fixed at first query start from
+    spark.sql.shuffle.partitions, so it is pinned to 4 for the run and
+    restored after. Result sets here are tiny (window counts, key sets),
+    so a handful of state-store instances per stateful operator is plenty
+    — each instance costs startup/maintenance wall-clock, the dominant
+    cost of an availableNow run (measured at sf0.1: stream_tumbling 1.44 s
+    with 8 instances, 1.28 s with 4, 1.2 s with 2; 4 keeps the
+    multi-instance path exercised while dropping most of the surcharge).
+    A real deployment sizes this to keys-per-partition, not to this value.
+
+    The checkpoint is ``name``'s: anonymous runs are one-shot, so it is
+    removed however the run ends. A ``resume`` run (a named, resumable
+    identity) keeps its checkpoint ON FAILURE so a rerun under the same
+    name continues from the first uncommitted batch; on success the
+    checkpoint and its ``.owner_pid`` liveness file both go, or one
+    orphan owner file would accumulate per run. ``stop_on_idle`` /
+    ``drain_state``: see run_available_now."""
+    spark = stream.sparkSession
+    ckpt = _checkpoint_dir(name, named=resume)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    ok = False
+    try:
+        query = (
+            stream.writeStream.foreachBatch(apply)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        if stop_on_idle is None:
+            query.awaitTermination()
+        else:
+            _stop_when_idle(
+                query, idle_batches=stop_on_idle,
+                require_empty_state=drain_state,
+            )
+        ok = True
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if ok or not resume:
+            shutil.rmtree(ckpt, ignore_errors=True)
+            if resume:
+                try:
+                    os.unlink(f"{ckpt}.owner_pid")
+                except OSError:
+                    pass
+
+
 def run_available_now(
     df: DataFrame, *, mode: str, prefix: str, batch_hook=None,
     stop_on_idle: int | None = None, drain_state: bool = True,
@@ -291,74 +496,19 @@ def run_available_now(
     watermark-bounded join residue) must pass drain_state=False or the
     idle-stop would spin to its timeout (r10 review wave 2).
     """
-    import shutil
-    import time as _time
-
     spark = df.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    # The state-store partition count is fixed at first query start from
-    # spark.sql.shuffle.partitions. Result sets here are tiny (window counts,
-    # key sets), so a handful of state-store instances per stateful operator
-    # is plenty — each instance costs startup/maintenance wall-clock, which
-    # is the dominant cost of an availableNow run (measured at sf0.1:
-    # stream_tumbling 1.44 s with 8 instances, 1.28 s with 4, 1.2 s with 2;
-    # 4 keeps the multi-instance path exercised while dropping most of the
-    # surcharge). A real deployment sizes this to keys-per-partition, not
-    # to this value.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    ckpt = _checkpoint_dir(name)
-    # Results can't be deleted eagerly (the returned DataFrame reads them
-    # lazily), and an mtime cutoff can delete under a live reader in a
-    # session spanning the cutoff. Scope results per PROCESS instead:
-    # this process writes under its own pid root, and reclaims sibling
-    # roots only once their owner is dead. Legacy flat dirs (pre-pid
-    # layout, or shared scratch from a crashed run without a pid name)
-    # still fall back to the mtime cutoff.
-    parent = os.path.join(SCRATCH, "results")
-    results_root = os.path.join(parent, f"pid{os.getpid()}")
-    if os.path.isdir(parent):
-        cutoff = _time.time() - 3600
-        for d in os.listdir(parent):
-            p = os.path.join(parent, d)
-            try:
-                if p == results_root:
-                    # our own root: reclaim only dirs this process did NOT
-                    # create — leftovers from a dead process that was
-                    # assigned our pid. Dirs we created stay until process
-                    # exit: each is a potentially-live lazy reader, which
-                    # is exactly why a blanket mtime cutoff was unsafe.
-                    for sub in os.listdir(p):
-                        sp = os.path.join(p, sub)
-                        if sp not in _LIVE_RESULTS:
-                            shutil.rmtree(sp, ignore_errors=True)
-                elif d.startswith("pid") and d[3:].isdigit():
-                    if not _pid_alive(int(d[3:])):
-                        shutil.rmtree(p, ignore_errors=True)
-                elif d == "named":
-                    # named B17 results: same owner-pid guard as named
-                    # checkpoints — a bare mtime rmtree here could delete
-                    # a LIVE cross-process run's committed batches (r9
-                    # review catch, the same class as the mv_incremental
-                    # state-root bug r8 fixed)
-                    _sweep_named(p, cutoff)
-                elif os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-    # Checkpoints have no lazy readers (the finally deletes them on every
+    _sweep_results()
+    # Checkpoints have no lazy readers (run_batches deletes them on every
     # normal exit), so a SIGKILLed run's checkpoint would otherwise leak
     # forever — sweep dead owners' dirs (liveness-guarded; see
     # _sweep_checkpoints for the layout contract).
     _sweep_checkpoints()
-    out = os.path.join(results_root, name)
-    _LIVE_RESULTS.add(out)
+    name, out = _run_root(f"{prefix}_")
 
-    # foreachBatch is at-least-once: a retried batch id re-runs _sink, so
-    # every write must be idempotent. Each batch overwrites its OWN subdir
-    # (re-delivery replaces, never duplicates); complete mode overwrites a
-    # single dir so the last batch's full result wins. Dir names avoid '='
-    # so the reader doesn't parse them as partition columns.
+    # Each batch overwrites its OWN subdir (re-delivery replaces, never
+    # duplicates); complete mode overwrites a single dir so the last
+    # batch's full result wins. Dir names avoid '=' so the reader doesn't
+    # parse them as partition columns.
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         sub = "complete" if mode == "complete" else f"b{batch_id}"
         if batch_hook is not None:
@@ -375,29 +525,10 @@ def run_available_now(
         else:
             batch_df.write.mode("overwrite").parquet(os.path.join(out, sub))
 
-    try:
-        query = (
-            df.writeStream.foreachBatch(_sink)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if stop_on_idle is None:
-            query.awaitTermination()
-        else:
-            # drain_state default: a bounded TTL run's contract is FULL
-            # drain (every open session closes once its idle_ms elapses);
-            # idle batches alone would stop over pending unexpired timeouts
-            _stop_when_idle(
-                query, idle_batches=stop_on_idle,
-                require_empty_state=drain_state,
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # gate runs are one-shot: the checkpoint is dead weight once the
-        # query terminates (uuid names mean it is never resumed)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_batches(
+        df, _sink, name=name, mode=mode, stop_on_idle=stop_on_idle,
+        drain_state=drain_state,
+    )
     paths = (
         [os.path.join(out, "complete")]
         if mode == "complete"
@@ -1090,10 +1221,7 @@ def _stream_quarantine_run(
         _quarantine_k().alias("k_val"),
         _quarantine_flag().alias("quarantined"),
     )
-    qdir = os.path.join(
-        SCRATCH, "results", f"pid{os.getpid()}", f"quarantine_{uuid.uuid4().hex[:8]}"
-    )
-    _LIVE_RESULTS.add(qdir)
+    _, qdir = _run_root("quarantine_")
 
     def hook(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.where(F.col("quarantined") == 1).write.mode("overwrite").parquet(
@@ -1372,36 +1500,6 @@ def _cdc_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _latest_version_below(root: str, batch_id: int) -> int | None:
-    """Latest committed state version STRICTLY below ``batch_id`` — a
-    redelivered batch must rebuild from its own predecessor, never merge
-    against its own (or a successor's) output, or retries double-count."""
-    versions = [
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit() and int(d[1:]) < batch_id
-    ]
-    return max(versions) if versions else None
-
-
-def _vacuum_cdc_versions(root: str, keep: int) -> None:
-    """Drop all but the newest ``keep`` committed state versions under
-    ``root`` — the E14 retention treatment for the B19 state lineage
-    (unbounded s{batch_id} history is a disk leak on a long-lived CDC
-    stream). ``keep >= 2`` preserves redelivery safety: Spark replays at
-    most the last uncommitted batch, whose predecessor is among the
-    newest two versions by construction."""
-    import shutil
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    for v in versions[:-keep]:
-        shutil.rmtree(os.path.join(root, f"s{v}"), ignore_errors=True)
-
-
 def stream_cdc_apply(
     spark: SparkSession, sf_dir: str, *, keep_versions: int | None = None
 ) -> DataFrame:
@@ -1416,7 +1514,7 @@ def stream_cdc_apply(
 
     Per batch, inside foreachBatch: _cdc_reduce the batch to one row per
     key (count + max_by over the ordered key), read the LATEST state
-    version below this batch id (_latest_version_below), _cdc_merge
+    version below this batch id (VersionedState.prior), _cdc_merge
     (counts add; the later ordered key wins the payload), and overwrite
     state version s{batch_id}.
     Versioned states make at-least-once redelivery idempotent — a
@@ -1430,75 +1528,38 @@ def stream_cdc_apply(
     at 100 TB the state table is bucketed by key (E2) so the merge is
     co-located; nothing driver-side; state versions are pruned by the
     same janitor as every other result root."""
-    if keep_versions is not None and keep_versions < 2:
-        # keep=1 would vacuum the redelivery anchor: a replayed batch's
-        # predecessor must survive, or the rebuild resets all state to
-        # that batch alone (r10 review); keep=0 is a silent no-op
-        raise ValueError(
-            f"keep_versions must be >= 2 (redelivery anchor), got {keep_versions}"
-        )
+    _check_keep(keep_versions)
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     stage = stage_multi_file_drop(ev, sf_dir, "events", "cdclog")
-
-    name = f"cdc_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("cdc_")
+    # keep_versions=None keeps the full history for the gate run's
+    # multi-version assertions; production CDC state needs bounded lineage
+    state = VersionedState(root, keep=keep_versions)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = _cdc_reduce(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _cdc_merge(prior, batch)
-        else:
-            merged = batch
-        merged.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
-        if keep_versions is not None:
-            # retention AFTER the commit: the just-written version is the
-            # newest, so its predecessor (redelivery anchor) survives any
-            # keep >= 2 (production CDC state needs bounded lineage —
-            # default None keeps the full history for the gate run's
-            # multi-version assertions)
-            _vacuum_cdc_versions(root, keep_versions)
+            batch = _cdc_merge(spark.read.parquet(state.path(prior_v)), batch)
+        state.write(batch_id, batch)
 
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "user_id bigint, n_events bigint, last_ts_us bigint, "
                 "last_type string, last_value double",
         )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}")).select(
+    return spark.read.parquet(state.path(v)).select(
         "user_id", "n_events", "last_ts_us", "last_type", "last_value"
     )
 
@@ -1538,8 +1599,6 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     append to the accumulating store after the pair emit. Scale: per
     batch O(batch codes) + one fixed-width block equi-join probed by the
     batch; the corpus is never re-decoded (codes only)."""
-    import shutil
-
     from frolyk_spark.operators.dedup import NEW_DOC_MOD
     from frolyk_spark.operators.multimodal import (
         dhash_codes_frame, media_probe_pairs, persisted_dhash_codes,
@@ -1553,22 +1612,15 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus_codes = persisted_dhash_codes(spark, sf_dir).where(~is_new)
 
-    name = f"smd_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    out = os.path.join(root, "batches")
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("smd_")
+    out = VersionedState(os.path.join(root, "batches"), prefix="b")
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         batch_codes = dhash_codes_frame(batch_df)
         batch_codes.persist()
         try:
             # prior batches' codes live under their side=codes partition
-            prior = sorted(
-                p for d in (os.listdir(out) if os.path.isdir(out) else [])
-                if d != f"b{batch_id}"  # a redelivered batch never self-probes
-                and os.path.isdir(p := os.path.join(out, d, "side=codes"))
-            )
+            prior = out.paths("codes", below=batch_id)
             fresh = batch_codes
             if prior:
                 fresh = fresh.unionByName(
@@ -1595,9 +1647,7 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "doc_id", "dhash",
                 )
             )
-            fused.write.mode("overwrite").partitionBy("side").parquet(
-                os.path.join(out, f"b{batch_id}")
-            )
+            out.write(batch_id, fused, by_side=True)
         finally:
             batch_codes.unpersist()
 
@@ -1606,25 +1656,8 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_probe)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    dirs = sorted(
-        p for d in (os.listdir(out) if os.path.isdir(out) else [])
-        if os.path.isdir(p := os.path.join(out, d, "side=pairs"))
-    )
+    run_batches(stream, _probe, name=name)
+    dirs = out.paths("pairs")
     if not dirs:
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, hamming bigint"
@@ -1652,7 +1685,6 @@ def stream_cdc_versioned(
     *,
     keep_versions: int | None = None,
     _name: str | None = None,
-    _fail_after_commit: int | None = None,
 ) -> DataFrame:
     """B19's CDC apply committing each materialized state as an E14
     versioned SNAPSHOT — the lakehouse composition a user actually wants:
@@ -1670,7 +1702,7 @@ def stream_cdc_versioned(
     finds its txn already committed and SKIPS, so no version is ever
     claimed twice and counts never double-apply. Each batch merges
     against the snapshot of the latest committed txn STRICTLY below its
-    own id, mirroring _latest_version_below's redelivery rule. The txn
+    own id, mirroring VersionedState.prior's redelivery rule. The txn
     skip is sound only within one checkpoint lineage (Spark replays the
     same content under the same batch id); a resumed run must reuse the
     ``_name`` identity, exactly like B17.
@@ -1681,33 +1713,19 @@ def stream_cdc_versioned(
     feeds read only manifest-listed files. Final result = latest
     snapshot, so the op shares B19's batching-invariant GROUP BY oracle.
     """
-    import shutil
-
     from frolyk_spark.sources.catalog import (
         committed_txns, read_versioned, vacuum_versioned, write_versioned,
     )
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
-    if keep_versions is not None and keep_versions < 2:
-        # same guard as B19: keep=1 would vacuum the redelivery anchor —
-        # a batch that crashes BEFORE its commit must still find its
-        # predecessor's manifest on redelivery
-        raise ValueError(
-            f"keep_versions must be >= 2 (redelivery anchor), got {keep_versions}"
-        )
-
+    # a batch that crashes BEFORE its commit must still find its
+    # predecessor's manifest on redelivery
+    _check_keep(keep_versions)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     stage = stage_multi_file_drop(ev, sf_dir, "events", "cdclog")
-
-    name = _name or f"cdcv_{uuid.uuid4().hex[:8]}"
-    if _name is None:
-        root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-        _LIVE_RESULTS.add(root)
-    else:
-        root = _named_dir("results", name)
-    ckpt = _checkpoint_dir(name, named=_name is not None)
+    name, root = _run_root("cdcv_", _name)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         txns = committed_txns(root)
@@ -1731,36 +1749,13 @@ def stream_cdc_versioned(
             # manifests drop out of committed_txns, which is correct —
             # their states are no longer reachable for time travel either
             vacuum_versioned(root, keep_last=keep_versions, grace_seconds=0.0)
-        if _fail_after_commit is not None and batch_id >= _fail_after_commit:
-            # test-only crash injection in the exact window the txn guard
-            # exists for: snapshot committed, checkpoint not yet
-            raise RuntimeError(f"injected crash after commit of batch {batch_id}")
 
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    ok = False
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-        ok = True
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if _name is None or ok:
-            # anonymous runs are one-shot; named runs keep their
-            # checkpoint ON FAILURE so a resume continues the lineage
-            shutil.rmtree(ckpt, ignore_errors=True)
-
+    run_batches(stream, _apply, name=name, resume=_name is not None)
     try:
         final = read_versioned(spark, root)
     except FileNotFoundError:
@@ -1780,7 +1775,6 @@ def stream_dedup_incremental(
     sf_dir: str,
     *,
     _name: str | None = None,
-    _fail_before_batch: int | None = None,
 ) -> DataFrame:
     """Continuous-ingest near-dup detection (B17): D28's batch-vs-corpus
     minhash probe run INSIDE the stream — the production shape of dedup on
@@ -1792,9 +1786,8 @@ def stream_dedup_incremental(
     under the same identity continues from the first uncommitted batch and
     the final pair set is identical to an uninterrupted run. ``_name``
     gives the run a resumable checkpoint identity (kept on failure,
-    removed on success); ``_fail_before_batch`` is the test-only crash
-    injection (raise before processing that batch id). Production callers
-    pass neither: each call is a fresh exactly-once ingest.
+    removed on success — run_batches). Production callers pass none:
+    each call is a fresh exactly-once ingest.
 
     The "new" split (doc_id % NEW_DOC_MOD == NEW_DOC_MOD-1, same as D28)
     is staged as a multi-file drop and consumed with maxFilesPerTrigger=1,
@@ -1817,8 +1810,6 @@ def stream_dedup_incremental(
     the batch; corpus text is never re-read (signatures only); accumulated
     state is the signature table itself — the E4 artifact a real pipeline
     already persists. Results land in parquet, never on the driver."""
-    import shutil
-
     from frolyk_spark.operators.dedup import (
         NEW_DOC_MOD, band_hashes, minhash_signatures_frame,
         persisted_minhash_signatures, probe_pairs,
@@ -1841,27 +1832,10 @@ def stream_dedup_incremental(
     # pipeline persists the band table next to the E4 signature table;
     # the in-memory cache is the single-run equivalent.
     corpus_bands = band_hashes(corpus_sigs).persist()
-
-    name = _name or f"sdi_{uuid.uuid4().hex[:8]}"
-    if _name is None:
-        root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-        _LIVE_RESULTS.add(root)
-    else:
-        # NAMED (resumable) runs key their outputs by run identity, NOT
-        # pid: the checkpoint skips committed batches on resume, so the
-        # committed batches' pairs/sigs must be where a DIFFERENT process
-        # can find them — a pid-scoped root would silently drop every
-        # pre-crash batch from the resumed result (and the janitor would
-        # reclaim it as a dead pid's leftovers). _named_dir records this
-        # process as the owner so the sweep never reclaims a live run;
-        # once the owner dies the 1-hour window bounds the leftovers.
-        root = _named_dir("results", name)
-    out = os.path.join(root, "batches")
-    ckpt = _checkpoint_dir(name, named=_name is not None)
+    name, root = _run_root("sdi_", _name)
+    out = VersionedState(os.path.join(root, "batches"), prefix="b")
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        if _fail_before_batch is not None and batch_id >= _fail_before_batch:
-            raise RuntimeError(f"injected crash before batch {batch_id}")
         # band the batch ONCE and accumulate BANDS, not signatures: the
         # accumulating store exists only to feed later batches' probe
         # side, which needs bands — storing them pre-expanded keeps the
@@ -1873,11 +1847,7 @@ def stream_dedup_incremental(
         batch_bands.persist()
         try:
             # prior batches' bands live under side=bands of their dir
-            prior = sorted(
-                p for d in (os.listdir(out) if os.path.isdir(out) else [])
-                if d != f"b{batch_id}"  # a redelivered batch never self-probes
-                and os.path.isdir(p := os.path.join(out, d, "side=bands"))
-            )
+            prior = out.paths("bands", below=batch_id)
             all_bands = corpus_bands.unionByName(batch_bands)
             if prior:
                 all_bands = all_bands.unionByName(
@@ -1911,9 +1881,7 @@ def stream_dedup_incremental(
                     "doc_id", "band_id", "band_hash",
                 )
             )
-            fused.write.mode("overwrite").partitionBy("side").parquet(
-                os.path.join(out, f"b{batch_id}")
-            )
+            out.write(batch_id, fused, by_side=True)
         finally:
             batch_bands.unpersist()
 
@@ -1922,38 +1890,11 @@ def stream_dedup_incremental(
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    ok = False
     try:
-        query = (
-            stream.writeStream.foreachBatch(_probe)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-        ok = True
+        run_batches(stream, _probe, name=name, resume=_name is not None)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         corpus_bands.unpersist()
-        # a NAMED run keeps its checkpoint on failure so a rerun resumes
-        # from the first uncommitted batch; anonymous runs always clean up
-        if ok or _name is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            if _name is not None:
-                # the checkpoint's owner file goes with it, or one orphan
-                # would accumulate per successful named run (r9 review)
-                try:
-                    os.unlink(f"{ckpt}.owner_pid")
-                except OSError:
-                    pass
-
-    parts = sorted(
-        p for d in (os.listdir(out) if os.path.isdir(out) else [])
-        if os.path.isdir(p := os.path.join(out, d, "side=pairs"))
-    )
+    parts = out.paths("pairs")
     if not parts:
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint"
@@ -2011,27 +1952,9 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, sf_dir, "events", "latert", LATE_PARTS, "event_id"
     )
 
-    name = f"latert_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
-    wm_root = os.path.join(root, "wm")
-
-    def _read_wm(batch_id: int) -> int | None:
-        """Running max event time from the latest state version strictly
-        below batch_id (B19's redelivery rule) — one long per version,
-        kept as an atomically-renamed text file: a scalar doesn't earn a
-        parquet write job per batch."""
-        versions = [
-            int(f[1:-4])
-            for f in (os.listdir(wm_root) if os.path.isdir(wm_root) else [])
-            if f.startswith("s") and f.endswith(".txt")
-            and f[1:-4].isdigit() and int(f[1:-4]) < batch_id
-        ]
-        if not versions:
-            return None
-        with open(os.path.join(wm_root, f"s{max(versions)}.txt")) as fh:
-            return int(fh.read())
+    name, root = _run_root("latert_")
+    # running max event time, one long per version
+    wm = VersionedState(os.path.join(root, "wm"))
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -2056,7 +1979,8 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"key mods [{mod_min}..{mod_max}] "
                     "(file listing order changed?)"
                 )
-            prior_max = _read_wm(batch_id)
+            prior_v = wm.prior(batch_id)
+            prior_max = None if prior_v is None else wm.scalar(prior_v)
             wm_us = -1 if prior_max is None else prior_max - LATE_DELAY_US
             # cast the literal: a -1 sentinel would otherwise write int32
             # while real watermarks write int64, splitting the sink schema
@@ -2082,11 +2006,7 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 running = batch_max if prior_max is None else max(prior_max, batch_max)
             if running is not None:
-                os.makedirs(wm_root, exist_ok=True)
-                tmp = os.path.join(wm_root, f".s{batch_id}.{uuid.uuid4().hex[:6]}")
-                with open(tmp, "w") as fh:
-                    fh.write(str(int(running)))
-                os.replace(tmp, os.path.join(wm_root, f"s{batch_id}.txt"))
+                wm.write_scalar(batch_id, running)
         finally:
             batch.unpersist()
 
@@ -2095,23 +2015,7 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = file_stream(
         spark, stage, ev.schema, max_files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_route)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
+    run_batches(stream, _route, name=name)
     rows_root = os.path.join(root, "rows")
     if not os.path.isdir(rows_root):
         return spark.createDataFrame(
@@ -2185,10 +2089,8 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "wsample")
 
-    name = f"wsample_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("wsample_")
+    state = VersionedState(root)
 
     def _bottom_k(df: DataFrame) -> DataFrame:
         return df.orderBy("priority", "doc_id").limit(WEIGHTED_K)
@@ -2206,48 +2108,24 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"({prio}) div cast(n_chars as bigint)").alias("priority"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _bottom_k(prior.unionByName(batch))
-        else:
-            merged = batch
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, f"s{batch_id}")
-        )
+            prior = spark.read.parquet(state.path(prior_v))
+            batch = _bottom_k(prior.unionByName(batch))
+        state.write(batch_id, batch.coalesce(1))
 
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "doc_id bigint, weight bigint, priority bigint"
         )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    return spark.read.parquet(state.path(v))
 
 
 # --- B28: streaming corpus-filter ingest gate -----------------------------------
@@ -2297,10 +2175,8 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, sf_dir, "documents", "cfilter", CFILTER_PARTS, range_key,
     )
 
-    name = f"cfilter_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("cfilter_")
+    rows = VersionedState(os.path.join(root, "rows"), prefix="b")
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -2324,15 +2200,7 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("rn") == 1)
                 .drop("rn")
             )
-            rows_root = os.path.join(root, "rows")
-            seen_dirs = [
-                os.path.join(rows_root, d, "side=seen")
-                for d in (
-                    os.listdir(rows_root) if os.path.isdir(rows_root) else []
-                )
-                if d.startswith("b") and int(d[1:]) < batch_id
-                and os.path.isdir(os.path.join(rows_root, d, "side=seen"))
-            ]
+            seen_dirs = rows.paths("seen", below=batch_id)
             if seen_dirs:
                 seen = spark.read.parquet(*seen_dirs).select("th")
                 firsts = firsts.join(seen, "th", "left_anti")
@@ -2355,54 +2223,28 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             # kept or filtered — a quality-rejected copy still makes
             # later duplicates drop, exactly like the batch operator's
             # window-then-filter order.
-            (
-                kept.select(
-                    F.lit("kept").alias("side"),
-                    "doc_id",
-                    "predicted_lang",
-                    F.col("quality_score").cast("double").alias("quality_score"),
-                    F.lit(None).cast("bigint").alias("th"),
+            fused = kept.select(
+                F.lit("kept").alias("side"),
+                "doc_id",
+                "predicted_lang",
+                F.col("quality_score").cast("double").alias("quality_score"),
+                F.lit(None).cast("bigint").alias("th"),
+            ).unionByName(
+                firsts.select(
+                    F.lit("seen").alias("side"),
+                    F.lit(None).cast("bigint").alias("doc_id"),
+                    F.lit(None).cast("string").alias("predicted_lang"),
+                    F.lit(None).cast("double").alias("quality_score"),
+                    "th",
                 )
-                .unionByName(
-                    firsts.select(
-                        F.lit("seen").alias("side"),
-                        F.lit(None).cast("bigint").alias("doc_id"),
-                        F.lit(None).cast("string").alias("predicted_lang"),
-                        F.lit(None).cast("double").alias("quality_score"),
-                        "th",
-                    )
-                )
-                .write.partitionBy("side")
-                .mode("overwrite")
-                .parquet(os.path.join(rows_root, f"b{batch_id}"))
             )
+            rows.write(batch_id, fused, by_side=True)
         finally:
             batch.unpersist()
 
     stream = file_stream(spark, stage, docs.schema, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_gate)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    rows_root = os.path.join(root, "rows")
-    parts = sorted(
-        os.path.join(rows_root, d, "side=kept")
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if os.path.isdir(os.path.join(rows_root, d, "side=kept"))
-    )
+    run_batches(stream, _gate, name=name)
+    parts = rows.paths("kept")
     if not parts:
         return spark.createDataFrame(
             [], "doc_id bigint, predicted_lang string, quality_score double"
@@ -2464,10 +2306,8 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     stage = stage_multi_file_drop(ev, sf_dir, "events", "kanonmon")
 
-    name = f"kanonmon_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("kanonmon_")
+    state = VersionedState(root)
 
     def _reduce(batch_df: DataFrame) -> DataFrame:
         return (
@@ -2482,49 +2322,27 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = _reduce(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _null_safe_add_merge(
-                prior, batch, ["event_type", "d", "vb"], "k"
+            batch = _null_safe_add_merge(
+                spark.read.parquet(state.path(prior_v)), batch,
+                ["event_type", "d", "vb"], "k",
             )
-        else:
-            merged = batch
-        merged.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
+        state.write(batch_id, batch)
 
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "k_band string, n_groups bigint, n_rows bigint, "
                 "violates_policy boolean",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    final = spark.read.parquet(state.path(v))
     band = (
         F.when(F.col("k") == 1, "1")
         .when(F.col("k") <= 4, "2-4")
@@ -2533,7 +2351,7 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("100+")
     )
     return (
-        state.select(band.alias("k_band"), "k")
+        final.select(band.alias("k_band"), "k")
         .groupBy("k_band")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_groups"),
@@ -2576,10 +2394,8 @@ def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     stage = stage_multi_file_drop(ev, sf_dir, "events", "ldivmon")
 
-    name = f"ldivmon_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("ldivmon_")
+    state = VersionedState(root)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         # the per-batch reduce IS the batch audits' first level — one
@@ -2588,54 +2404,31 @@ def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         from frolyk_spark.operators.governance import qi_pairs
 
         batch = qi_pairs(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _null_safe_add_merge(
-                prior, batch, ["d", "vb", "event_type"], "c"
+            batch = _null_safe_add_merge(
+                spark.read.parquet(state.path(prior_v)), batch,
+                ["d", "vb", "event_type"], "c",
             )
-        else:
-            merged = batch
-        merged.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
+        state.write(batch_id, batch)
 
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "l_band string, n_groups bigint, n_rows bigint, "
                 "violates_policy boolean",
         )
     from frolyk_spark.operators.governance import l_band_histogram
 
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     # the final view IS the batch audit's second level — one shared
     # definition (r15 review), so the oracle-sharing claim can't drift
-    return l_band_histogram(state)
+    return l_band_histogram(spark.read.parquet(state.path(v)))
 
 
 # --- B26: streaming tokenize -> pack training-data feed ------------------------
@@ -2689,23 +2482,9 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(m[1], m[2], m[3]) for m in persisted_bpe_merges(spark, sf_dir)]
     )
 
-    name = f"tokfeed_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
-    off_root = os.path.join(root, "offset")
-
-    def _read_base(batch_id: int) -> int:
-        versions = [
-            int(f[1:-4])
-            for f in (os.listdir(off_root) if os.path.isdir(off_root) else [])
-            if f.startswith("s") and f.endswith(".txt")
-            and f[1:-4].isdigit() and int(f[1:-4]) < batch_id
-        ]
-        if not versions:
-            return 0
-        with open(os.path.join(off_root, f"s{max(versions)}.txt")) as fh:
-            return int(fh.read())
+    name, root = _run_root("tokfeed_")
+    # end offset of the packed stream, one long per version
+    offsets = VersionedState(os.path.join(root, "offset"))
 
     def _feed(batch_df: DataFrame, batch_id: int) -> None:
         words = batch_df.select(
@@ -2757,7 +2536,8 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                         f"batch {batch_id} violated the content contract: "
                         f"doc mods [{lo}..{hi}]"
                     )
-                base = _read_base(batch_id)
+                prior_v = offsets.prior(batch_id)
+                base = 0 if prior_v is None else offsets.scalar(prior_v)
                 packed, end = packed_offsets(
                     toks.drop("mod"),
                     base_offset=base,
@@ -2766,36 +2546,14 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 packed.write.mode("overwrite").parquet(
                     os.path.join(root, "packed", f"batch_id={batch_id}")
                 )
-                os.makedirs(off_root, exist_ok=True)
-                tmp = os.path.join(
-                    off_root, f".s{batch_id}.{uuid.uuid4().hex[:6]}"
-                )
-                with open(tmp, "w") as fh:
-                    fh.write(str(int(end)))
-                os.replace(tmp, os.path.join(off_root, f"s{batch_id}.txt"))
+                offsets.write_scalar(batch_id, end)
             finally:
                 toks.unpersist()
         finally:
             words.unpersist()
 
     stream = file_stream(spark, stage, docs.schema, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_feed)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
+    run_batches(stream, _feed, name=name)
     packed_root = os.path.join(root, "packed")
     if not os.path.isdir(packed_root):
         return spark.createDataFrame(
@@ -2873,10 +2631,8 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "cmsmon")
 
-    name = f"cmsmon_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("cmsmon_")
+    state = VersionedState(root)
 
     pairs_expr = (
         "transform(array(split(text, ' ')), ws -> "
@@ -2913,9 +2669,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("r", "bucket")
             .agg(F.sum("cnt").cast("bigint").alias("tot"))
         )
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+            prior = spark.read.parquet(state.path(prior_v))
             pw = prior.where(F.col("side") == "words").select(
                 "word", F.col("cnt").alias("cnt_prior")
             )
@@ -2943,64 +2699,39 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("tot"),
                 )
             )
-        (
-            wc.select(
-                F.lit("words").alias("side"),
-                "word",
-                "cnt",
-                F.lit(None).cast("int").alias("r"),
-                F.lit(None).cast("bigint").alias("bucket"),
-                F.lit(None).cast("bigint").alias("tot"),
+        state.write(batch_id, wc.select(
+            F.lit("words").alias("side"),
+            "word",
+            "cnt",
+            F.lit(None).cast("int").alias("r"),
+            F.lit(None).cast("bigint").alias("bucket"),
+            F.lit(None).cast("bigint").alias("tot"),
+        ).unionByName(
+            cells.select(
+                F.lit("cells").alias("side"),
+                F.lit(None).cast("string").alias("word"),
+                F.lit(None).cast("bigint").alias("cnt"),
+                F.col("r").cast("int").alias("r"),
+                "bucket",
+                "tot",
             )
-            .unionByName(
-                cells.select(
-                    F.lit("cells").alias("side"),
-                    F.lit(None).cast("string").alias("word"),
-                    F.lit(None).cast("bigint").alias("cnt"),
-                    F.col("r").cast("int").alias("r"),
-                    "bucket",
-                    "tot",
-                )
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, f"s{batch_id}"))
-        )
+        ))
 
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "word string, est_count bigint, true_count bigint, "
                 "overcount bigint",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
-    wc = state.where(F.col("side") == "words").select("word", "cnt")
-    cells = state.where(F.col("side") == "cells").select("r", "bucket", "tot")
+    final = spark.read.parquet(state.path(v))
+    wc = final.where(F.col("side") == "words").select("word", "cnt")
+    cells = final.where(F.col("side") == "cells").select("r", "bucket", "tot")
     wb = wc.select(
         "word",
         "cnt",
@@ -3063,10 +2794,8 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_expr = f"((doc_id - {int(mn)}) * {VG_BUCKETS}) div {span}"
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "vgrowth")
 
-    name = f"vgrowth_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("vgrowth_")
+    state = VersionedState(root)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         firsts = (
@@ -3087,9 +2816,9 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_toks").cast("bigint").alias("toks"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+            prior = spark.read.parquet(state.path(prior_v))
             pw = prior.where(F.col("side") == "words").select(
                 "word", F.col("fd").alias("fd_prior")
             )
@@ -3119,69 +2848,44 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("toks"),
                 )
             )
-        (
-            firsts.select(
-                F.lit("words").alias("side"),
-                "word",
-                "fd",
-                F.lit(None).cast("bigint").alias("bucket"),
-                F.lit(None).cast("bigint").alias("n_docs_b"),
-                F.lit(None).cast("bigint").alias("toks"),
+        state.write(batch_id, firsts.select(
+            F.lit("words").alias("side"),
+            "word",
+            "fd",
+            F.lit(None).cast("bigint").alias("bucket"),
+            F.lit(None).cast("bigint").alias("n_docs_b"),
+            F.lit(None).cast("bigint").alias("toks"),
+        ).unionByName(
+            slices.select(
+                F.lit("slices").alias("side"),
+                F.lit(None).cast("string").alias("word"),
+                F.lit(None).cast("bigint").alias("fd"),
+                "bucket",
+                "n_docs_b",
+                "toks",
             )
-            .unionByName(
-                slices.select(
-                    F.lit("slices").alias("side"),
-                    F.lit(None).cast("string").alias("word"),
-                    F.lit(None).cast("bigint").alias("fd"),
-                    "bucket",
-                    "n_docs_b",
-                    "toks",
-                )
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, f"s{batch_id}"))
-        )
+        ))
 
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "bucket bigint, n_docs_b bigint, new_words bigint, "
                 "cum_tokens bigint, cum_vocab bigint",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    final = spark.read.parquet(state.path(v))
     fb = (
-        state.where(F.col("side") == "words")
+        final.where(F.col("side") == "words")
         .select(F.expr(bucket_expr.replace("doc_id", "fd")).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("new_words"))
     )
-    slices = state.where(F.col("side") == "slices").select(
+    slices = final.where(F.col("side") == "slices").select(
         "bucket", "n_docs_b", "toks"
     )
     spine = spark.range(VG_BUCKETS).select(
@@ -3259,11 +2963,8 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, sf_dir, "events", "asofjoin", ASOF_STREAM_PARTS, range_key,
     )
 
-    name = f"asofjoin_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
-    rows_root = os.path.join(root, "rows")
+    name, root = _run_root("asofjoin_")
+    rows = VersionedState(os.path.join(root, "rows"), prefix="b")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.persist()
@@ -3278,17 +2979,10 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"batch {batch_id} violated the range contract: "
                     f"quarters [{blo}..{bhi}]"
                 )
-            prior = [
-                int(d[1:])
-                for d in (
-                    os.listdir(rows_root) if os.path.isdir(rows_root) else []
-                )
-                if d.startswith("b") and int(d[1:]) < batch_id
-                and os.path.isdir(os.path.join(rows_root, d, "side=state"))
-            ]
-            if prior:
+            prior_v = rows.prior(batch_id, "state")
+            if prior_v is not None:
                 state = spark.read.parquet(
-                    os.path.join(rows_root, f"b{max(prior)}", "side=state")
+                    rows.path(prior_v, "state")
                 ).select("user_id", F.col("last_click_us").alias("st_click_us"))
             else:
                 state = spark.createDataFrame(
@@ -3327,53 +3021,28 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.greatest("bc", "st_click_us").alias("last_click_us"),
                 )
             )
-            (
-                out.select(
-                    F.lit("out").alias("side"),
-                    "event_id",
+            fused = out.select(
+                F.lit("out").alias("side"),
+                "event_id",
+                "user_id",
+                "ts_us",
+                "last_click_us",
+            ).unionByName(
+                new_state.select(
+                    F.lit("state").alias("side"),
+                    F.lit(None).cast("bigint").alias("event_id"),
                     "user_id",
-                    "ts_us",
+                    F.lit(None).cast("bigint").alias("ts_us"),
                     "last_click_us",
                 )
-                .unionByName(
-                    new_state.select(
-                        F.lit("state").alias("side"),
-                        F.lit(None).cast("bigint").alias("event_id"),
-                        "user_id",
-                        F.lit(None).cast("bigint").alias("ts_us"),
-                        "last_click_us",
-                    )
-                )
-                .write.partitionBy("side")
-                .mode("overwrite")
-                .parquet(os.path.join(rows_root, f"b{batch_id}"))
             )
+            rows.write(batch_id, fused, by_side=True)
         finally:
             batch.unpersist()
 
     stream = file_stream(spark, stage, ev.schema, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    parts = sorted(
-        os.path.join(rows_root, d, "side=out")
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if os.path.isdir(os.path.join(rows_root, d, "side=out"))
-    )
+    run_batches(stream, _apply, name=name)
+    parts = rows.paths("out")
     if not parts:
         return spark.createDataFrame(
             [], "event_id bigint, user_id bigint, ts_us bigint, last_click_us bigint"
@@ -3419,10 +3088,8 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stage = stage_multi_file_drop(o, sf_dir, "orders", "qsketchmon")
 
-    name = f"qsk_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("qsk_")
+    state = VersionedState(root)
 
     # fixed bin geometry, derived once from the staged drop (the E10
     # stats read a production deployment would use) — never per batch
@@ -3441,9 +3108,9 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}")).select(
+            prior = spark.read.parquet(state.path(prior_v)).select(
                 "bin", F.col("cnt").alias("c0")
             )
             zero = F.lit(0).cast("bigint")
@@ -3451,42 +3118,22 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bin",
                 (F.coalesce("c0", zero) + F.coalesce("cnt", zero)).alias("cnt"),
             )
-        bins.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
+        state.write(batch_id, bins)
 
     stream = (
         spark.readStream.schema(o.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [],
             "decile bigint, target_rank bigint, est_cents bigint, "
             "exact_cents bigint, err_cents bigint",
         )
-    final_bins = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    final_bins = spark.read.parquet(state.path(v))
     # count conservation: the merged state must account for every source
     # row before anything is estimated from it
     n_state = final_bins.agg(F.sum("cnt")).collect()[0][0]
@@ -3577,11 +3224,9 @@ def stream_edge_degrees(
     # catalog tables the SCRATCH janitor can't see, so liveness rides in
     # the table name itself (the .owner_pid posture, r15 review) and the
     # sweep above reclaims tables whose owner died before its finally
-    name = f"edgemon{os.getpid()}x{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
+    name, root = _run_root(f"edgemon{os.getpid()}x")
     rows_root = os.path.join(root, "rows")
-    ckpt = _checkpoint_dir(name)
+    rows = VersionedState(rows_root, prefix="b")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         lo, hi, n = batch_df.agg(
@@ -3603,15 +3248,11 @@ def stream_edge_degrees(
         # the cadence length; the store side probes Exchange-free.
         if batch_id > 0 and batch_id % EDGE_COMPACT_EVERY == 0:
             sealed_below = [
-                i
-                for d in os.listdir(rows_root)
-                if d.startswith("b") and d[1:].isdigit()
-                and (i := int(d[1:])) < batch_id
-                and os.path.exists(os.path.join(rows_root, d, "_SUCCESS"))
+                i for i in rows.versions(below=batch_id)
+                if os.path.exists(os.path.join(rows.path(i), "_SUCCESS"))
             ]
             has_edges = any(
-                os.path.isdir(os.path.join(rows_root, f"b{i}", "side=edges"))
-                for i in sealed_below
+                os.path.isdir(rows.path(i, "edges")) for i in sealed_below
             )
             if sealed_below and has_edges:
                 compact_edge_store(
@@ -3641,14 +3282,11 @@ def stream_edge_degrees(
                 .groupBy("part")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
             )
-            prior_v = _latest_version_below_dir(rows_root, batch_id)
+            prior_v = rows.prior(batch_id, "degrees")
             if prior_v is not None:
-                prior_deg = (
-                    spark.read.parquet(
-                        os.path.join(rows_root, f"b{prior_v}", "side=degrees")
-                    )
-                    .select("part", F.col("degree").alias("d0"))
-                )
+                prior_deg = spark.read.parquet(
+                    rows.path(prior_v, "degrees")
+                ).select("part", F.col("degree").alias("d0"))
                 zero = F.lit(0).cast("bigint")
                 deltas = prior_deg.join(deltas, "part", "full_outer").select(
                     "part",
@@ -3671,9 +3309,7 @@ def stream_edge_degrees(
                     "degree",
                 )
             )
-            fused.write.mode("overwrite").partitionBy("side").parquet(
-                os.path.join(rows_root, f"b{batch_id}")
-            )
+            rows.write(batch_id, fused, by_side=True)
         finally:
             new_edges.unpersist()
 
@@ -3682,22 +3318,9 @@ def stream_edge_degrees(
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
+        run_batches(stream, _apply, name=name)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
         if not keep_store:
             # teardown: drop the versioned store tables and the marker —
             # every side=edges delta dir is still in place, so the layout
@@ -3708,18 +3331,11 @@ def stream_edge_degrees(
             if os.path.exists(m):
                 os.remove(m)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if d.startswith("b") and d[1:].isdigit()
-        and os.path.isdir(os.path.join(rows_root, d, "side=degrees"))
-    )
-    if not versions:
+    v = rows.latest("degrees")
+    if v is None:
         return spark.createDataFrame([], "part_key bigint, degree bigint")
     return (
-        spark.read.parquet(
-            os.path.join(rows_root, f"b{versions[-1]}", "side=degrees")
-        )
+        spark.read.parquet(rows.path(v, "degrees"))
         .select(
             F.col("part").cast("bigint").alias("part_key"),
             F.col("degree").cast("bigint").alias("degree"),
@@ -3740,7 +3356,6 @@ def _sweep_dead_edge_stores(spark: SparkSession) -> None:
     same-session case). PermissionError from kill(pid, 0) means the pid
     is alive under another user — left alone."""
     import re as _re
-    import shutil as _shutil
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     if wh.startswith("file://"):
@@ -3763,7 +3378,7 @@ def _sweep_dead_edge_stores(spark: SparkSession) -> None:
             continue  # alive under another user
         except ProcessLookupError:
             pass
-        _shutil.rmtree(os.path.join(wh, entry), ignore_errors=True)
+        shutil.rmtree(os.path.join(wh, entry), ignore_errors=True)
         spark.sql(f"DROP TABLE IF EXISTS {entry}")
 
 
@@ -3814,14 +3429,13 @@ def compact_edge_store(
     so the immediately-superseded version (the one the PREVIOUS marker
     named — a reader may have resolved it just before this publish) is
     KEPT; only versions older than the previous watermark are dropped
-    (the _vacuum_cdc_versions retention-by-count posture). A reader
+    (VersionedState's retention-by-count posture). A reader
     holding a frame across TWO compaction cycles is out of contract."""
-    sealed = sorted(
-        int(d[1:])
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if d.startswith("b") and d[1:].isdigit()
-        and os.path.exists(os.path.join(rows_root, d, "_SUCCESS"))
-    )
+    rows = VersionedState(rows_root, prefix="b")
+    sealed = [
+        i for i in rows.versions()
+        if os.path.exists(os.path.join(rows.path(i), "_SUCCESS"))
+    ]
     if not sealed:
         raise ValueError(f"no sealed batch dirs under {rows_root}")
     # an overshooting watermark would silently exclude batches that land
@@ -3839,10 +3453,8 @@ def compact_edge_store(
             "permanently exclude their edges from every read"
         )
     dirs = [
-        p
-        for i in sealed
-        if i <= through_batch
-        and os.path.isdir(p := os.path.join(rows_root, f"b{i}", "side=edges"))
+        rows.path(i, "edges") for i in sealed
+        if i <= through_batch and os.path.isdir(rows.path(i, "edges"))
     ]
     if not dirs:
         raise ValueError(
@@ -3909,14 +3521,11 @@ def _edge_store_parts(
             f"{exclude_batch}, which must be excluded — the cadence may "
             "only compact strictly below the live batch"
         )
-    deltas = sorted(
-        os.path.join(rows_root, d, "side=edges")
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if d.startswith("b") and d[1:].isdigit()
-        and int(d[1:]) > through
-        and (exclude_batch is None or int(d[1:]) != exclude_batch)
-        and os.path.isdir(os.path.join(rows_root, d, "side=edges"))
-    )
+    rows = VersionedState(rows_root, prefix="b")
+    deltas = [
+        rows.path(v, "edges") for v in rows.versions(side="edges")
+        if v > through and v != exclude_batch
+    ]
     store = (
         spark.table(f"{table_name}_t{through}").select("src", "dst")
         if through >= 0
@@ -3947,19 +3556,6 @@ def read_edge_store(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _latest_version_below_dir(rows_root: str, batch_id: int) -> int | None:
-    """Newest committed b{N} dir with N < batch_id that carries a
-    side=degrees partition — the redelivery anchor for B34's merged
-    state (the _latest_version_below shape for side-partitioned dirs)."""
-    cands = [
-        int(d[1:])
-        for d in (os.listdir(rows_root) if os.path.isdir(rows_root) else [])
-        if d.startswith("b") and d[1:].isdigit() and int(d[1:]) < batch_id
-        and os.path.isdir(os.path.join(rows_root, d, "side=degrees"))
-    ]
-    return max(cands) if cands else None
 
 
 STREAM_EDGE_DEGREES_SQL = """
@@ -4037,7 +3633,7 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from frolyk_spark.functions.lineage import cut_lineage
     from frolyk_spark.operators.dedup import min_label_propagation
-    from frolyk_spark.operators.graph import COMPONENTS_ROUNDS
+    from frolyk_spark.operators.graph import COMPONENTS_ROUNDS, basket_half_join
     from frolyk_spark.sources.streams import stage_keyed_file_drop
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -4045,13 +3641,10 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, sf_dir, "lineitem", "edgemon", EDGEMON_PARTS, "l_orderkey"
     )
 
-    name = f"ccmon_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
-
-    def _conv_path(v: int) -> str:
-        return os.path.join(root, f"conv_s{v}.txt")
+    name, root = _run_root("ccmon_")
+    labels = VersionedState(root)
+    # the per-version converged flag (1/0) beside each label version
+    conv = VersionedState(root, prefix="conv_s")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         lo, hi, n = batch_df.agg(
@@ -4069,33 +3662,23 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # label state is deliberately never checkpointed, because the
         # prior version is already parquet on disk (the CLAUDE.md
         # cheap-rescan exception covers its three reads below).
-        # The kernel's outer pair-distinct is SKIPPED here (r16): both
-        # consumers re-distinct downstream (ends explicitly, cpairs after
-        # contraction), so the extra shuffle of the full pair set bought
-        # nothing — duplicate half-edges (two orders sharing a pair, mean
-        # multiplicity ~1.2 on basket data) ride the batch-sized
-        # contraction joins and collapse in cpairs.distinct(). Output
-        # bit-identical (probe checksums, r16 ledger); B34 keeps the
-        # distinct kernel — its edge store must not double-count.
-        dli = batch_df.select("l_orderkey", "l_partkey").distinct()
-        pa, pb = dli.alias("a"), dli.alias("b")
-        pairs = cut_lineage(
-            pa.join(pb, "l_orderkey")
-            .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-            .select(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-        )
+        # The un-distincted join (basket_half_join, not basket_half_pairs,
+        # r16): both consumers re-distinct downstream (ends explicitly,
+        # cpairs after contraction), so a pair-distinct shuffle of the
+        # full pair set would buy nothing — duplicate half-edges (two
+        # orders sharing a pair, mean multiplicity ~1.2 on basket data)
+        # ride the batch-sized contraction joins and collapse in
+        # cpairs.distinct(). B34 keeps the distinct kernel — its edge
+        # store must not double-count.
+        pairs = cut_lineage(basket_half_join(batch_df))
         ends = pairs.select(
             F.explode(F.array("src", "dst")).alias("part")
         ).distinct()
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = labels.prior(batch_id)
         prior_conv = True
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            with open(_conv_path(prior_v)) as fh:
-                prior_conv = fh.read().strip() == "1"
+            prior = spark.read.parquet(labels.path(prior_v))
+            prior_conv = conv.scalar(prior_v) == 1
             # label(x) = stored label, or x itself for first-seen parts —
             # resolved by LEFT joins against the bare prior scan, so no
             # union/anti-join materializes on the contracted path
@@ -4145,48 +3728,24 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("merged", F.col("label")).cast("bigint").alias("label"),
             )
         )
-        new_state.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
-        tmp = _conv_path(batch_id) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write("1" if (prior_conv and conv_b) else "0")
-        os.replace(tmp, _conv_path(batch_id))
+        labels.write(batch_id, new_state)
+        conv.write_scalar(batch_id, prior_conv and conv_b)
 
     stream = (
         spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = labels.latest()
+    if v is None:
         return spark.createDataFrame(
             [],
             "part_key bigint, component_id bigint, is_canonical boolean, "
             "component_size bigint, converged boolean",
         )
-    final = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
-    with open(_conv_path(versions[-1])) as fh:
-        converged = fh.read().strip() == "1"
+    final = spark.read.parquet(labels.path(v))
+    converged = conv.scalar(v) == 1
     sizes = final.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("component_size")
     )
@@ -4225,10 +3784,8 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "lenmon")
 
-    name = f"lenmon_{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
-    _LIVE_RESULTS.add(root)
-    ckpt = _checkpoint_dir(name)
+    name, root = _run_root("lenmon_")
+    state = VersionedState(root)
 
     n_tokens = F.size(F.split("text", " "))
     bucket = (F.length(F.bin(n_tokens)) - 1).cast("bigint")
@@ -4246,9 +3803,9 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").cast("bigint").alias("n_tokens"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
+        prior_v = state.prior(batch_id)
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}")).select(
+            prior = spark.read.parquet(state.path(prior_v)).select(
                 "source",
                 "len_bucket",
                 F.col("n_docs").alias("d0"),
@@ -4261,40 +3818,20 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.coalesce("d0", zero) + F.coalesce("n_docs", zero)).alias("n_docs"),
                 (F.coalesce("t0", zero) + F.coalesce("n_tokens", zero)).alias("n_tokens"),
             )
-        hist.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
+        state.write(batch_id, hist)
 
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    run_batches(stream, _apply, name=name)
+    v = state.latest()
+    if v is None:
         return spark.createDataFrame(
             [], "source string, len_bucket bigint, n_docs bigint, n_tokens bigint"
         )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}")).select(
+    return spark.read.parquet(state.path(v)).select(
         "source", "len_bucket", "n_docs", "n_tokens"
     )
 

@@ -42,9 +42,10 @@ def test_loop_partitions_core_floor_and_bytes_term(spark):
 def test_loop_partitions_respects_lowered_session_setting(spark):
     # a streaming foreachBatch body pins partitions=4: that pin is a
     # ceiling. It is kept exactly when the core half (cores // 2) is at
-    # least 4; on fewer cores the documented core half applies instead.
+    # least 4; on fewer cores the documented core half applies instead,
+    # floored at 2 (one partition would cost a second exchange per round).
     cores = spark.sparkContext.defaultParallelism
-    half = max(1, cores // 2)
+    half = max(2, cores // 2)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -53,6 +54,18 @@ def test_loop_partitions_respects_lowered_session_setting(spark):
         assert got == (4 if half >= 4 else half)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_min_label_propagation_rejects_zero_rounds(spark):
+    """The lazy edge cut is materialized by round 1's fixpoint count
+    inside fixed_plan_loop; a round budget below 1 has no such round and
+    must fail fast instead of returning unlooped labels."""
+    from frolyk_spark.operators.dedup import min_label_propagation
+
+    pairs = spark.createDataFrame([(1, 2)], "doc_a bigint, doc_b bigint")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iters"):
+            min_label_propagation(pairs, bad)
 
 
 def test_loop_partitions_env_override(spark, monkeypatch):

@@ -29,6 +29,27 @@ def _write_batch(spark, path, rows, schema):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
 
 
+def _crash_runs(monkeypatch, batch, *, after):
+    """Make every jobs.run_batches run raise at ``batch``: before its body
+    runs, or ``after`` it (the window between the body and the offset
+    commit) — the crash a resumable run must survive."""
+    from frolyk_spark.streaming import jobs
+
+    real = jobs.run_batches
+
+    def crashing_runs(stream, apply, **kw):
+        def crashing(batch_df, batch_id):
+            if batch_id >= batch and not after:
+                raise RuntimeError(f"injected crash before batch {batch_id}")
+            apply(batch_df, batch_id)
+            if batch_id >= batch and after:
+                raise RuntimeError(f"injected crash after batch {batch_id}")
+
+        real(stream, crashing, **kw)
+
+    monkeypatch.setattr(jobs, "run_batches", crashing_runs)
+
+
 def _run_foreach(spark, in_dir, ckpt, schema, max_files=None):
     """One availableNow run collecting every micro-batch's rows."""
     stream = spark.readStream.schema(schema)
@@ -545,7 +566,7 @@ def test_stream_dedup_incremental_multibatch_equals_batch(spark, sf_dir):
     assert len(batches) >= 2, f"expected multi-batch ingest, got {batches}"
 
 
-def test_stream_dedup_incremental_crash_resume(spark, sf_dir):
+def test_stream_dedup_incremental_crash_resume(spark, sf_dir, monkeypatch):
     """B17 recovery contract: crash mid-ingest (injected before batch 2 of
     4), resume under the same checkpoint identity, and the final pair set
     must equal the uninterrupted one-shot probe — the committed batches
@@ -561,16 +582,21 @@ def test_stream_dedup_incremental_crash_resume(spark, sf_dir):
     # liveness file (see jobs._checkpoint_dir) so the janitor never
     # reclaims a live run and a post-crash rerun can find it cross-process
     ckpt = os.path.join(SCRATCH, "checkpoints", "named", name)
-    with pytest.raises(Exception, match="injected crash"):
-        stream_dedup_incremental(spark, sf_dir, _name=name, _fail_before_batch=2)
+    with monkeypatch.context() as m, pytest.raises(Exception, match="injected crash"):
+        _crash_runs(m, 2, after=False)
+        stream_dedup_incremental(spark, sf_dir, _name=name)
     # the named run must have kept its checkpoint (that's what resuming is)
+    # and its owner liveness file
     assert os.path.isdir(ckpt), "checkpoint must survive the crash"
+    assert os.path.exists(f"{ckpt}.owner_pid")
     got_df = stream_dedup_incremental(spark, sf_dir, _name=name)
     got = {(r.doc_a, r.doc_b) for r in got_df.collect()}
     want = {(r.doc_a, r.doc_b) for r in dedup_incremental(spark, sf_dir).collect()}
     assert want and got == want
-    # success cleans the checkpoint; the fused sinks show all 4 batches ran
+    # success cleans the checkpoint and its owner file; the fused sinks
+    # show all 4 batches ran
     assert not os.path.isdir(ckpt)
+    assert not os.path.exists(f"{ckpt}.owner_pid")
     src = got_df.inputFiles()[0].removeprefix("file://")
     root = os.path.dirname(os.path.dirname(os.path.dirname(src)))
     assert len([d for d in os.listdir(root) if d.startswith("b")]) == 4
@@ -690,11 +716,13 @@ def test_stream_cdc_apply_multibatch_equals_batch(spark, sf_dir):
 
     # (c) the version filter picks each batch's true predecessor on the
     # run's own persisted versions — never itself, never a successor
-    from frolyk_spark.streaming.jobs import _latest_version_below
+    from frolyk_spark.streaming.jobs import VersionedState
 
-    assert _latest_version_below(root, versions[0]) is None
+    state = VersionedState(root)
+    assert state.versions() == versions
+    assert state.prior(versions[0]) is None
     for prev, cur in zip(versions, versions[1:]):
-        assert _latest_version_below(root, cur) == prev, (prev, cur)
+        assert state.prior(cur) == prev, (prev, cur)
 
 
 def test_cdc_merge_redelivery_idempotent(spark):
@@ -1261,7 +1289,7 @@ def test_cdc_merge_batching_invariant(spark):
 
 # --- B23: CDC into E14 versioned snapshots -------------------------------------
 
-def test_cdc_versioned_crash_after_commit_resumes_exactly_once(spark, sf_dir):
+def test_cdc_versioned_crash_after_commit_resumes_exactly_once(spark, sf_dir, monkeypatch):
     """B23's txn guard in the exact window it exists for: crash AFTER
     batch 1's snapshot commit but BEFORE its checkpoint commit. The
     resume redelivers batch 1, finds txn b1 already committed, SKIPS it
@@ -1276,9 +1304,11 @@ def test_cdc_versioned_crash_after_commit_resumes_exactly_once(spark, sf_dir):
 
     name = f"cdcv_resume_{_uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(SCRATCH, "checkpoints", "named", name)
-    with pytest.raises(Exception, match="injected crash"):
-        stream_cdc_versioned(spark, sf_dir, _name=name, _fail_after_commit=1)
+    with monkeypatch.context() as m, pytest.raises(Exception, match="injected crash"):
+        _crash_runs(m, 1, after=True)
+        stream_cdc_versioned(spark, sf_dir, _name=name)
     assert os.path.isdir(ckpt), "checkpoint must survive the crash"
+    assert os.path.exists(f"{ckpt}.owner_pid")
     root = os.path.join(SCRATCH, "results", "named", name)
     before = committed_txns(root)
     assert "b1" in before, "crash landed after the commit — txn must exist"
@@ -1296,6 +1326,7 @@ def test_cdc_versioned_crash_after_commit_resumes_exactly_once(spark, sf_dir):
     want = {key(r) for r in stream_cdc_apply(spark, sf_dir).collect()}
     assert want and got == want
     assert not os.path.isdir(ckpt), "success must clean the named checkpoint"
+    assert not os.path.exists(f"{ckpt}.owner_pid"), "and its owner file"
 
 
 def test_cdc_versioned_time_travel_and_change_feed(spark, sf_dir):
@@ -2064,3 +2095,44 @@ def test_sweep_dead_edge_stores_reclaims_warehouse_dirs(spark):
         assert not _os.path.isdir(dead_dir)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {live}")
+
+
+# --- every versioned-state operator under redelivery -------------------------
+
+def _run_batches_callers():
+    import inspect
+
+    from frolyk_spark.streaming.jobs import QUERIES
+
+    return sorted(
+        k for k, f in QUERIES.items() if "run_batches(" in inspect.getsource(f)
+    )
+
+
+@pytest.mark.parametrize("name", _run_batches_callers())
+def test_stateful_stream_equals_oracle_under_redelivery(
+    name, spark, duck, sf_dir, monkeypatch
+):
+    """Every operator that runs its own foreachBatch body (a direct
+    run_batches caller) must end oracle-equal when each batch is applied
+    TWICE under the same batch id — what Spark does to the last
+    uncommitted batch after a crash between the body and the offset
+    commit. A failure here is a real redelivery bug in the operator."""
+    from frolyk_spark.streaming import jobs
+    from tests.compare import compare_results
+
+    real = jobs.run_batches
+    replayed = []
+
+    def replaying(stream, apply, **kw):
+        def twice(batch_df, batch_id):
+            apply(batch_df, batch_id)
+            apply(batch_df, batch_id)
+            replayed.append(batch_id)
+
+        real(stream, twice, **kw)
+
+    monkeypatch.setattr(jobs, "run_batches", replaying)
+    df = jobs.QUERIES[name](spark, sf_dir)
+    assert replayed, "the operator did not run through run_batches"
+    compare_results(df, duck.sql(jobs.ORACLES[name]))
