@@ -156,17 +156,17 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_signature_path(sf_dir: str) -> str:
-    """Scratch path of the persisted signature artifact — exposed so the
-    clustering consumers can size their fixed-plan loop partitioning from
-    its on-disk bytes (the graph loops' _copurchase_path posture)."""
-    import hashlib
+def _minhash_artifact(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """(path, bytes) of the persisted signature artifact; the bytes size
+    the clustering consumers' fixed-plan loops. The key carries the
+    signature geometry (k, seeds, shingle width): a change re-hashes."""
+    from frolyk_spark.sources.streams import artifact
 
-    from frolyk_spark.sources.streams import SCRATCH
-
-    target = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(target.encode()).hexdigest()[:12]
-    return os.path.join(SCRATCH, "signatures", f"minhash_{key}.parquet")
+    return artifact(
+        "signatures", [os.path.join(sf_dir, "documents.parquet")],
+        ("minhash", MINHASH_K, MINHASH_SEEDS, SHINGLE_W),
+        lambda d: minhash_signatures(spark, sf_dir).write.mode("overwrite").parquet(d),
+    )
 
 
 def persisted_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,12 +174,8 @@ def persisted_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     reread on later calls — the incremental-corpus shape a real pipeline
     needs: signatures are computed when documents land and every downstream
     consumer (banding, clustering, re-runs with new thresholds) reads the
-    parquet instead of re-hashing the corpus. Keyed on the resolved source
-    path, like the stream staging dirs."""
-    out = _minhash_signature_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        minhash_signatures(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    parquet instead of re-hashing the corpus."""
+    return spark.read.parquet(_minhash_artifact(spark, sf_dir)[0])
 
 
 def _band_hashes_for(sigs: DataFrame, b_cnt: int) -> DataFrame:
@@ -848,14 +844,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing every shingle of every document — runs once per corpus and is
     reread from parquet here, the incremental shape a real pipeline needs.
     """
-    from frolyk_spark.functions.loops import dir_bytes
-
-    # the persisted call above the dir_bytes read: first touch builds the
-    # artifact, so the loop sizing always sees the real on-disk size
-    pairs = band_pairs(persisted_minhash_signatures(spark, sf_dir))
-    return min_label_clusters(
-        pairs, big_bytes=dir_bytes(_minhash_signature_path(sf_dir))
-    )
+    # first touch builds the artifact before the loop is sized from it
+    path, nbytes = _minhash_artifact(spark, sf_dir)
+    pairs = band_pairs(spark.read.parquet(path))
+    return min_label_clusters(pairs, big_bytes=nbytes)
 
 
 def min_label_propagation(

@@ -112,34 +112,35 @@ def copurchase_edges_frame(li: DataFrame) -> DataFrame:
     return symmetric_edges(basket_half_pairs(li))
 
 
-def _copurchase_path(sf_dir: str, *, weighted: bool = False) -> str:
-    """Scratch path of the persisted co-purchase artifact — exposed so
-    loop consumers can size their shuffle partitioning from its on-disk
-    bytes (functions.loops.loop_partitions) without re-deriving the key."""
-    import hashlib
+def _copurchase_artifact(
+    spark: SparkSession, sf_dir: str, *, weighted: bool = False
+) -> tuple[str, int]:
+    """(path, bytes) of the persisted co-purchase edge artifact — the
+    bytes size the loop consumers' shuffle partitioning
+    (functions.loops.loop_partitions)."""
+    from frolyk_spark.sources.streams import artifact
 
-    from frolyk_spark.sources.streams import SCRATCH
+    def build(d: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem")
+        edges = (
+            symmetric_edges(basket_half_pairs(li, weighted=True), carry=("w",))
+            if weighted else copurchase_edges_frame(li)
+        )
+        edges.write.mode("overwrite").parquet(d)
 
-    target = os.path.realpath(os.path.join(sf_dir, "lineitem.parquet"))
-    key = hashlib.md5(target.encode()).hexdigest()[:12]
-    prefix = "copurchase_w" if weighted else "copurchase"
-    return os.path.join(SCRATCH, "graphs", f"{prefix}_{key}.parquet")
+    return artifact(
+        "graphs", [os.path.join(sf_dir, "lineitem.parquet")],
+        ("copurchase_w" if weighted else "copurchase",), build,
+    )
 
 
 def persisted_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The co-purchase graph persisted once per source dataset under
-    source-keyed scratch (the E4 persisted-state pattern, like the minhash
-    signature and dHash code tables): the basket self-join is the
-    expensive stage, the edge list is dataset-derived state every
-    consumer (PageRank rounds here; any future graph analysis) rereads
-    from parquet instead of re-forming. NEVER under the pid-scoped
-    results root (CLAUDE.md janitor rule)."""
-    out = _copurchase_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        copurchase_edges_frame(
-            load_table(spark, sf_dir, "lineitem")
-        ).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    """The co-purchase graph persisted once per source dataset (the E4
+    persisted-state pattern, like the minhash signature and dHash code
+    tables): the basket self-join is the expensive stage, the edge list
+    is dataset-derived state every consumer (PageRank rounds here; any
+    future graph analysis) rereads from parquet instead of re-forming."""
+    return spark.read.parquet(_copurchase_artifact(spark, sf_dir)[0])
 
 
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,14 +168,14 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round runs exactly ONE exchange, the inflow aggregate transport
     # (11.5 s / 56 AQE stage-jobs -> ~5.5 s / 7 jobs at sf0.1, checksum-
     # identical; plan pinned in tests/test_loops.py)
-    from frolyk_spark.functions.loops import dir_bytes, fixed_plan_loop
+    from frolyk_spark.functions.loops import fixed_plan_loop
 
     # build the persisted artifact BEFORE sizing/entering the loop (r15
-    # ADVICE): on first touch dir_bytes would read 0 and the expensive
-    # one-time basket self-join would run under the loop's pinned tiny
+    # ADVICE): the loop is sized from its bytes, and the expensive
+    # one-time basket self-join must not run under the loop's pinned tiny
     # partition count with AQE off — severely under-partitioned at scale
-    edge_src = persisted_copurchase_edges(spark, sf_dir)
-    ebytes = dir_bytes(_copurchase_path(sf_dir))
+    path, ebytes = _copurchase_artifact(spark, sf_dir)
+    edge_src = spark.read.parquet(path)
     with fixed_plan_loop(spark, big_bytes=ebytes) as nparts:
         edges = edge_src.repartition(nparts, "src").persist()
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -346,11 +347,11 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash(part) through every checkpoint, so a round's only exchange is
     # the loss aggregate transport (the casualty join itself runs
     # co-partitioned: removed is a filter+rename of the hash(part) state)
-    from frolyk_spark.functions.loops import dir_bytes, fixed_plan_loop
+    from frolyk_spark.functions.loops import fixed_plan_loop
 
     # artifact ensured before sizing/entering the loop — see pagerank_parts
-    edge_src = persisted_copurchase_edges(spark, sf_dir)
-    ebytes = dir_bytes(_copurchase_path(sf_dir))
+    path, ebytes = _copurchase_artifact(spark, sf_dir)
+    edge_src = spark.read.parquet(path)
     with fixed_plan_loop(spark, big_bytes=ebytes) as nparts:
         edges = edge_src.repartition(nparts, "dst").persist()
         deg0 = edges.groupBy("src").agg(
@@ -675,7 +676,6 @@ def components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint landing exactly on the final round). Labels are part keys
     (BIGINTs) end to end — bit-exact across engines by construction.
     """
-    from frolyk_spark.functions.loops import dir_bytes
     from frolyk_spark.operators.dedup import min_label_propagation
 
     # the persisted table is already symmetric — declare it so the
@@ -684,14 +684,12 @@ def components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the r15 fixed-plan loop regime — one up-front exchange buys
     # co-partitioned rounds, superseding the r13 bare-rescan posture),
     # and sizes its partitioning from the artifact's on-disk bytes
-    pairs = persisted_copurchase_edges(spark, sf_dir).select(
+    path, ebytes = _copurchase_artifact(spark, sf_dir)
+    pairs = spark.read.parquet(path).select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
     )
     labels, converged = min_label_propagation(
-        pairs,
-        COMPONENTS_ROUNDS,
-        symmetric=True,
-        big_bytes=dir_bytes(_copurchase_path(sf_dir)),
+        pairs, COMPONENTS_ROUNDS, symmetric=True, big_bytes=ebytes,
     )
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("component_size")
@@ -781,11 +779,14 @@ def graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     All BIGINT end to end ⇒ bit-exact mirror oracle. Overflow bound:
     exact while m·(max deg)² < 2^63 and n·(max strength)² < 2^63 —
     beyond ~10^6-degree hubs on 10^12-edge graphs these sums need
-    bucketing, noted here rather than silently wrapped. Shuffles: one
-    degree count + one strength sum over the persisted edge tables
-    (E4), two bounded bucket groupBys, one edge scan joining the
-    (lineage-cut, thrice-consumed) degree table on both endpoints —
+    bucketing, noted here rather than silently wrapped. Shuffles: ONE
+    fused aggregate over the persisted WEIGHTED edge table (E4) yields
+    the lineage-cut (part, deg, s) table, then two bounded bucket
+    groupBys and one edge scan joining that table on both endpoints —
     un-hinted, AQE broadcasts while small (CLAUDE.md model-table rule).
+    So graph_profile builds the weighted artifact on its first call
+    (besides the unweighted one), even in a deployment whose other
+    consumers read only the unweighted table.
     log2 buckets via the bin-string bit-width trick
     (length(bin(x))-1), never libm.
     """
@@ -920,19 +921,11 @@ def persisted_copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
     self-join is the same single l_orderkey shuffle; the only change from
     the unweighted build is count(*) instead of distinct over the pair
     groupBy. Kept as a SEPARATE artifact from the unweighted table: its
-    consumers (C74) need the weight column, while the unweighted table's
-    five residents (C67/C69-C72) reuse their established schema — and a
-    schema change under a _SUCCESS reuse check would silently serve old
+    consumers (C74, graph_profile) need the weight column, while the
+    unweighted table's residents (C67/C69-C72) reuse their established
+    schema — a schema change under one key would silently serve old
     files to new readers."""
-    out = _copurchase_path(sf_dir, weighted=True)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        symmetric_edges(
-            basket_half_pairs(
-                load_table(spark, sf_dir, "lineitem"), weighted=True
-            ),
-            carry=("w",),
-        ).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return spark.read.parquet(_copurchase_artifact(spark, sf_dir, weighted=True)[0])
 
 
 def pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,11 +952,11 @@ def pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # fixed-plan loop — the C67 r15 regime (see pagerank_parts): one
     # exchange per round, edges cached pre-partitioned on src
-    from frolyk_spark.functions.loops import dir_bytes, fixed_plan_loop
+    from frolyk_spark.functions.loops import fixed_plan_loop
 
     # artifact ensured before sizing/entering the loop — see pagerank_parts
-    edge_src = persisted_copurchase_weighted(spark, sf_dir)
-    ebytes = dir_bytes(_copurchase_path(sf_dir, weighted=True))
+    path, ebytes = _copurchase_artifact(spark, sf_dir, weighted=True)
+    edge_src = spark.read.parquet(path)
     with fixed_plan_loop(spark, big_bytes=ebytes) as nparts:
         edges = edge_src.repartition(nparts, "src").persist()
         wdeg = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wdeg"))
@@ -1104,11 +1097,11 @@ def kcore_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph.py::_python_wkcore."""
     # fixed-plan loop — the kcore_parts r15 regime: edges pre-partitioned
     # on dst, one exchange (the loss transport) + one count action per round
-    from frolyk_spark.functions.loops import dir_bytes, fixed_plan_loop
+    from frolyk_spark.functions.loops import fixed_plan_loop
 
     # artifact ensured before sizing/entering the loop — see pagerank_parts
-    edge_src = persisted_copurchase_weighted(spark, sf_dir)
-    ebytes = dir_bytes(_copurchase_path(sf_dir, weighted=True))
+    path, ebytes = _copurchase_artifact(spark, sf_dir, weighted=True)
+    edge_src = spark.read.parquet(path)
     with fixed_plan_loop(spark, big_bytes=ebytes) as nparts:
         edges = edge_src.repartition(nparts, "dst").persist()
         s0 = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))

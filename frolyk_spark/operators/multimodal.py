@@ -13,6 +13,7 @@ never concentrate on the driver or in one worker's memory).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
@@ -462,54 +463,47 @@ SELECT * FROM img_rows UNION ALL SELECT * FROM aud_rows
 
 def stage_binary_assets(spark: SparkSession, sf_dir: str) -> str:
     """One real .bmp FILE per image-modality document (even doc_ids),
-    staged once per dataset under source-keyed scratch — the test-scale
+    staged once per dataset as a persisted artifact — the test-scale
     stand-in for the object-store prefix a 100 TB media corpus actually
     lives in. Files are written EXECUTOR-side (mapInPandas over the
     documents scan; local mode shares the filesystem, a cluster would
     write the same loop against object storage) with atomic per-file
-    renames — never a driver collect, and idempotent under concurrent
-    staging because every racer writes identical bytes."""
-    import hashlib
-    import os
-
+    renames — never a driver collect."""
     from frolyk_spark.functions.codecs import encode_bmp
-    from frolyk_spark.sources.streams import SCRATCH
+    from frolyk_spark.sources.streams import artifact
 
-    target = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(target.encode()).hexdigest()[:12]
-    out = os.path.join(SCRATCH, "assets", f"bmp_{key}")
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
+    def build(out: str) -> None:
+        def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            import hashlib as _h
+            import os as _os
+            import uuid as _uuid
 
-    def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _h
-        import os as _os
-        import uuid as _uuid
+            for pdf in batches:
+                n = 0
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                    if doc_id % 2 != 0:
+                        continue
+                    src = bytes.fromhex(
+                        _h.md5(text.encode()).hexdigest() * MEDIA_SRC_REPEATS
+                    )
+                    w = 4 * (1 + doc_id % 8)
+                    h = 2 + doc_id % 7
+                    payload = bytes(encode_bmp(src[: 3 * w * h], w, h))
+                    tmp = _os.path.join(out, f".img_{doc_id}.{_uuid.uuid4().hex[:6]}")
+                    with open(tmp, "wb") as fh:
+                        fh.write(payload)
+                    _os.replace(tmp, _os.path.join(out, f"img_{doc_id:010d}.bmp"))
+                    n += 1
+                yield pd.DataFrame({"n": [n]})
 
-        for pdf in batches:
-            n = 0
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id % 2 != 0:
-                    continue
-                src = bytes.fromhex(
-                    _h.md5(text.encode()).hexdigest() * MEDIA_SRC_REPEATS
-                )
-                w = 4 * (1 + doc_id % 8)
-                h = 2 + doc_id % 7
-                payload = bytes(encode_bmp(src[: 3 * w * h], w, h))
-                tmp = _os.path.join(out, f".img_{doc_id}.{_uuid.uuid4().hex[:6]}")
-                with open(tmp, "wb") as fh:
-                    fh.write(payload)
-                _os.replace(tmp, _os.path.join(out, f"img_{doc_id:010d}.bmp"))
-                n += 1
-            yield pd.DataFrame({"n": [n]})
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        docs.mapInPandas(write_files, "n bigint").agg(F.sum("n")).collect()
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.mapInPandas(write_files, "n bigint").agg(F.sum("n")).collect()
-    open(marker, "w").close()
-    return out
+    path, _ = artifact(
+        "assets", [os.path.join(sf_dir, "documents.parquet")],
+        ("bmp", MEDIA_SRC_REPEATS), build,
+    )
+    return path
 
 
 def media_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,19 +757,17 @@ def _dhash_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dhash_codes_frame(docs)
 
 
-def _dhash_path(sf_dir: str) -> str:
-    """Scratch path of the persisted dHash artifact — exposed so the
-    clustering consumer can size its fixed-plan loop partitioning from
-    its on-disk bytes (the dedup._minhash_signature_path posture)."""
-    import hashlib
+def _dhash_artifact(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """(path, bytes) of the persisted dHash artifact; the bytes size the
+    clustering consumer's fixed-plan loop. The key carries the code and
+    thumbnail geometry: a change re-decodes."""
+    from frolyk_spark.sources.streams import artifact
 
-    import os as _os
-
-    from frolyk_spark.sources.streams import SCRATCH
-
-    target = _os.path.realpath(_os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(f"{target}:dhash{DHASH_BITS}".encode()).hexdigest()[:12]
-    return _os.path.join(SCRATCH, "signatures", f"dhash_{key}.parquet")
+    return artifact(
+        "signatures", [os.path.join(sf_dir, "documents.parquet")],
+        ("dhash", DHASH_GRID_X, DHASH_GRID_Y, IMG_W, IMG_H, IMG_GROUP),
+        lambda d: _dhash_codes(spark, sf_dir).write.mode("overwrite").parquet(d),
+    )
 
 
 def persisted_dhash_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -784,14 +776,8 @@ def persisted_dhash_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the media modality: codes are computed when assets land, and
     every consumer (pairing, clustering, the streaming incremental
     probe, re-runs at new thresholds) reads the parquet instead of
-    re-decoding the corpus. Keyed on the resolved source path + the
-    dHash geometry version."""
-    import os as _os
-
-    out = _dhash_path(sf_dir)
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        _dhash_codes(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    re-decoding the corpus."""
+    return spark.read.parquet(_dhash_artifact(spark, sf_dir)[0])
 
 
 def _hamming_pairs(codes: DataFrame, col: str) -> DataFrame:
@@ -1068,13 +1054,11 @@ def media_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as dedup_canonical does for text. Oracle: the image-pair SQL
     feeds the same tiny-diameter transitive-closure CTE the D15 oracle
     uses (tractable at oracle scale; the Spark side stays iterative)."""
-    from frolyk_spark.functions.loops import dir_bytes
     from frolyk_spark.operators.dedup import min_label_clusters
 
-    # image_dedup's persisted_dhash_codes call ensures the artifact exists
-    # before dir_bytes sizes the loop from it (r15 verdict item 2)
+    # the loop is sized from the artifact's bytes (r15 verdict item 2)
     pairs = image_dedup(spark, sf_dir)
-    return min_label_clusters(pairs, big_bytes=dir_bytes(_dhash_path(sf_dir)))
+    return min_label_clusters(pairs, big_bytes=_dhash_artifact(spark, sf_dir)[1])
 
 
 def _media_clusters_sql() -> str:

@@ -2626,28 +2626,25 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a row landing in both or neither side) diverges. Money sums round
     cents-exactly (CLAUDE rule: money-sum rounds are safe); no ratios.
 
-    State lives under SCRATCH/mv_state keyed by the resolved source path
-    (the persisted_minhash_signatures idiom) with a _SUCCESS reuse check:
-    the base build genuinely runs ONCE per dataset — later calls in the
-    same or another process read the compact state and pay only the
-    delta — and the dir sits OUTSIDE the streaming janitor's pid-scoped
-    results root, so a streaming op in the same process can never reclaim
-    it out from under the returned (lazily-read) frame.
+    The state is a persisted artifact (streams.artifact) keyed by the
+    resolved source path and the cutoff, so a changed refresh horizon
+    never reuses state built for the old one. The base build runs ONCE
+    per dataset: later calls in the same or another process read the
+    compact state and pay only the delta. The state sits OUTSIDE the
+    streaming janitor's pid-scoped results root, so a streaming op in the
+    same process can never reclaim it out from under the returned
+    (lazily-read) frame.
     """
-    import hashlib
-
-    from frolyk_spark.sources.streams import SCRATCH
+    from frolyk_spark.sources.streams import artifact
 
     li = _t(spark, sf_dir, "lineitem")
     cutoff = F.lit(MV_CUTOFF).cast("timestamp")
-    target = os.path.realpath(os.path.join(sf_dir, "lineitem.parquet"))
-    # the cutoff is part of the key: a changed refresh horizon must never
-    # silently reuse state built for the old one
-    key = hashlib.md5(f"{target}|{MV_CUTOFF}".encode()).hexdigest()[:12]
-    state_dir = os.path.join(SCRATCH, "mv_state", f"pricing_{key}.parquet")
-    if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-        base = _mv_partials(li.filter(F.col("l_shipdate") < cutoff))
-        base.write.mode("overwrite").parquet(state_dir)
+    state_dir, _ = artifact(
+        "mv_state", [os.path.join(sf_dir, "lineitem.parquet")],
+        ("pricing", MV_CUTOFF),
+        lambda d: _mv_partials(li.filter(F.col("l_shipdate") < cutoff))
+        .write.mode("overwrite").parquet(d),
+    )
     state = spark.read.parquet(state_dir)
     delta = _mv_partials(li.filter(F.col("l_shipdate") >= cutoff))
     merged = (

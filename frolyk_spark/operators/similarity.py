@@ -21,6 +21,7 @@ the LSH bucketing matmul, which is deliberately a vectorized pandas UDF.
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from frolyk_spark.functions.portable import round4, round4_sql, round6, round6_sql
 from frolyk_spark.functions.vectors import cosine, cosine_sql, norm, norm_sql
 from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.streams import artifact
 
 #: probes = vec_id < N_PROBES, corpus = the rest
 N_PROBES = 10
@@ -407,21 +409,6 @@ def _assign_cluster(df: DataFrame, emb_col: str, centroids) -> DataFrame:
     return df.withColumn("cluster", nearest(F.col(emb_col)))
 
 
-def _ann_scratch(sf_dir: str, tag: str) -> str:
-    """Source-keyed scratch path for a persisted ANN index artifact (the
-    E4 train-once shape): keyed by the resolved embeddings path, with the
-    index geometry in the tag so a parameter change never serves a stale
-    fit. NEVER under the pid-scoped results root (CLAUDE.md janitor
-    rule)."""
-    import os
-
-    from frolyk_spark.sources.streams import SCRATCH
-
-    target = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
-    key = hashlib.md5(target.encode()).hexdigest()[:12]
-    return os.path.join(SCRATCH, "ann", f"{tag}_{key}.parquet")
-
-
 def persisted_ivf_index(spark: SparkSession, sf_dir: str):
     """IVF index BUILD, persisted once per (corpus, geometry) — the r14
     verdict's build/query split: the Lloyd fit and the per-vector cell
@@ -435,29 +422,32 @@ def persisted_ivf_index(spark: SparkSession, sf_dir: str):
     Float64 parquet round-trips exactly, so the reloaded fit is
     bit-identical to the inline one and the SQL oracle (which re-derives
     the fit end-to-end) is unchanged."""
-    import os
-
     import numpy as np
 
-    geo = f"c{IVF_CLUSTERS}i{IVF_ITERS}p{N_PROBES}"
-    cdir = _ann_scratch(sf_dir, f"ivf_cent_{geo}")
-    adir = _ann_scratch(sf_dir, f"ivf_cells_{geo}")
-    if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
+    src = [os.path.join(sf_dir, "embeddings.parquet")]
+    geo = (IVF_CLUSTERS, IVF_ITERS, N_PROBES)
+
+    def fit(d: str) -> None:
         _, corpus = _split(spark, sf_dir)
-        fit = _train_centroids(corpus, "cand_emb")
         spark.createDataFrame(
-            [(int(i), [float(v) for v in c]) for i, c in enumerate(fit)],
+            [(int(i), [float(v) for v in c])
+             for i, c in enumerate(_train_centroids(corpus, "cand_emb"))],
             "cluster int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cdir)
+        ).coalesce(1).write.mode("overwrite").parquet(d)
+
+    cdir, _ = artifact("ann", src, ("ivf_cent", geo), fit)
     rows = spark.read.parquet(cdir).orderBy("cluster").collect()
     centroids = np.stack(
         [np.asarray(r.centroid, dtype=np.float64) for r in rows]
     )
-    if not os.path.exists(os.path.join(adir, "_SUCCESS")):
+
+    def assign(d: str) -> None:
         _, corpus = _split(spark, sf_dir)
         _assign_cluster(corpus, "cand_emb", centroids).write.mode(
             "overwrite"
-        ).partitionBy("cluster").parquet(adir)
+        ).partitionBy("cluster").parquet(d)
+
+    adir, _ = artifact("ann", src, ("ivf_cells", geo), assign)
     return centroids, spark.read.parquet(adir)
 
 
@@ -562,24 +552,23 @@ def persisted_pq_index(spark: SparkSession, sf_dir: str):
     code array<int>)). Float64/int parquet round-trips exactly, so the
     SQL oracle (which re-derives fit + encode end-to-end) is
     unchanged."""
-    import os
-
     import numpy as np
 
-    geo = f"m{PQ_M}k{PQ_K}s{PQ_SAMPLE}i{PQ_ITERS}p{N_PROBES}"
-    bdir = _ann_scratch(sf_dir, f"pq_books_{geo}")
-    codir = _ann_scratch(sf_dir, f"pq_codes_{geo}")
-    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
+    src = [os.path.join(sf_dir, "embeddings.parquet")]
+    geo = (PQ_M, PQ_K, PQ_SAMPLE, PQ_ITERS, N_PROBES)
+
+    def fit(d: str) -> None:
         _, corpus = _split(spark, sf_dir)
-        fit = _pq_codebooks(corpus, "cand_emb")
         spark.createDataFrame(
             [
                 (int(m), int(k), [float(v) for v in cb[k]])
-                for m, cb in enumerate(fit)
+                for m, cb in enumerate(_pq_codebooks(corpus, "cand_emb"))
                 for k in range(len(cb))
             ],
             "m int, k int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(bdir)
+        ).coalesce(1).write.mode("overwrite").parquet(d)
+
+    bdir, _ = artifact("ann", src, ("pq_books", geo), fit)
     rows = spark.read.parquet(bdir).orderBy("m", "k").collect()
     books = []
     for m in range(PQ_M):
@@ -592,11 +581,14 @@ def persisted_pq_index(spark: SparkSession, sf_dir: str):
                 ]
             )
         )
-    if not os.path.exists(os.path.join(codir, "_SUCCESS")):
+
+    def encode(d: str) -> None:
         _, corpus = _split(spark, sf_dir)
         corpus.select(
             "neighbor_id", _pq_encode_udf(books)(F.col("cand_emb")).alias("code")
-        ).write.mode("overwrite").parquet(codir)
+        ).write.mode("overwrite").parquet(d)
+
+    codir, _ = artifact("ann", src, ("pq_codes", geo), encode)
     return books, spark.read.parquet(codir)
 
 
@@ -1619,10 +1611,13 @@ def ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipelines each used to re-derive the corpus projection (parquet
     # scan + repartition exchange per consumer — 16 scans in the executed
     # plan) and THREE of them re-collected the probe set. One lineage-cut
-    # corpus and one probe collect now feed every pipeline; the cut is
-    # the audit operator's own trade (4+ full passes over one bounded
-    # projection), not a helper default — standalone ann_lsh/ann_pq keep
-    # their bare-scan shape.
+    # corpus and one probe collect now feed every pipeline. The corpus is
+    # every embedding but the N_PROBES probes, so it scales with SF:
+    # the cut materializes it ONCE into executor storage (one extra
+    # corpus-sized copy for the audit's duration) in exchange for the 16
+    # scan + exchange re-derivations. That is the audit operator's own
+    # trade, not a helper default — standalone ann_lsh/ann_pq keep their
+    # bare-scan shape.
     probes, corpus_raw = _split(spark, sf_dir)
     corpus = cut_lineage(corpus_raw)
     probe_rows = probes.collect()

@@ -493,18 +493,12 @@ def persisted_bpe_merges(
     model is O({BPE_MERGES}) rows — bounded driver state, like IVF
     centroids. Cache key = resolved source path + depth (a depth change
     re-trains, never silently reuses)."""
-    import hashlib
-
     import os as _os
 
-    from frolyk_spark.sources.streams import SCRATCH
+    from frolyk_spark.functions.lineage import cut_lineage
+    from frolyk_spark.sources.streams import artifact
 
-    target = _os.path.realpath(_os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(f"{target}:{BPE_MERGES}".encode()).hexdigest()[:12]
-    out = _os.path.join(SCRATCH, "models", f"bpe_{key}.parquet")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        from frolyk_spark.functions.lineage import cut_lineage
-
+    def train(d: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("text")
         wf = (
             docs.repartition(spark.sparkContext.defaultParallelism)
@@ -525,7 +519,12 @@ def persisted_bpe_merges(
         spark.createDataFrame(
             merges,
             "step int, left string, right string, merged string, cnt bigint",
-        ).coalesce(1).write.mode("overwrite").parquet(out)
+        ).coalesce(1).write.mode("overwrite").parquet(d)
+
+    out, _ = artifact(
+        "models", [_os.path.join(sf_dir, "documents.parquet")],
+        ("bpe", BPE_MERGES), train,
+    )
     rows = spark.read.parquet(out).orderBy("step").collect()
     return [(r.step, r.left, r.right, r.merged, r.cnt) for r in rows]
 

@@ -20,6 +20,96 @@ SCRATCH = os.path.join(
 )
 
 
+def _pid_alive(pid: int) -> bool:
+    """True if a process with this pid exists (EPERM counts as alive)."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
+def artifact(kind: str, sources, params, build) -> tuple[str, int]:
+    """THE one way to key, build and publish a persisted train-once
+    artifact (signature/code tables, co-purchase edges, ANN fits, BPE
+    merges, MV partials, staged assets, stream drops). Never under the
+    pid-scoped results root the streaming janitor reclaims.
+
+    - Key: md5 of the sorted resolved ``sources`` plus ``params``, linked
+      at SCRATCH/<kind>/<key>. Two datasets sharing a basename never
+      collide, and everything that shapes the bytes (geometry, depth,
+      split) belongs in ``params``, so a change rebuilds instead of
+      serving stale files.
+    - Build: ``build(dir)`` writes into a private
+      ``<key>.build-<pid>-<uuid>`` dir; ``_SUCCESS`` is written here once
+      it returns. A failed build is removed.
+    - Publish: the first ``os.symlink`` onto the key wins; a losing
+      racer deletes its own build and takes the winner's. A half-written
+      real dir or a dangling link at the key is repaired, never reused.
+      Build dirs whose owner process is dead are reclaimed, never the one
+      the link points to.
+    - Return: (resolved build dir, its byte size). A reader of the
+      resolved dir never sees its files change, and the size is what
+      ``loop_partitions`` sizes a fixed-plan loop from.
+    """
+    import hashlib
+    import shutil
+    import uuid
+
+    from frolyk_spark.functions.loops import dir_bytes
+
+    resolved = sorted(os.path.realpath(s) for s in sources)
+    key = hashlib.md5(repr((resolved, params)).encode()).hexdigest()[:12]
+    root = os.path.join(SCRATCH, kind)
+    link = os.path.join(root, key)
+    os.makedirs(root, exist_ok=True)
+    for name in os.listdir(root):
+        k, sep, owner = name.partition(".build-")
+        pid, stale = owner.split("-")[0], os.path.join(root, name)
+        if (sep and pid.isdigit() and not _pid_alive(int(pid))
+                and os.path.realpath(os.path.join(root, k)) != stale):
+            shutil.rmtree(stale, ignore_errors=True)
+
+    def complete(p: str) -> bool:
+        return os.path.exists(os.path.join(p, "_SUCCESS"))
+
+    if not complete(link):
+        mine = f"{link}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        os.makedirs(mine)
+        try:
+            build(mine)
+            open(os.path.join(mine, "_SUCCESS"), "w").close()
+        except BaseException:
+            shutil.rmtree(mine, ignore_errors=True)
+            raise
+        for _attempt in range(3):
+            try:
+                os.symlink(mine, link)
+                return mine, dir_bytes(mine)
+            except FileExistsError:
+                pass
+            if complete(link):
+                shutil.rmtree(mine, ignore_errors=True)
+                break
+            # repair: a crashed pre-link writer's real dir, or a link
+            # whose target is gone
+            if os.path.islink(link):
+                try:
+                    os.unlink(link)
+                except FileNotFoundError:
+                    pass
+            else:
+                shutil.rmtree(link, ignore_errors=True)
+        else:
+            # a concurrent repairer keeps winning (or EACCES): our own
+            # complete build is the safe answer
+            return mine, dir_bytes(mine)
+    path = os.path.realpath(link)
+    return path, dir_bytes(path)
+
+
 def stage_stream_dir(sf_dir: str, table: str) -> str:
     """Directory the file-stream source can list, containing a symlink to
     the table's parquet (file sources reject bare file paths).
@@ -52,51 +142,15 @@ def stage_multi_file_drop(df: DataFrame, sf_dir: str, table: str,
                           salt: str, parts: int = 4) -> str:
     """Stage ``df`` as a ``parts``-file parquet drop a file stream can
     consume one file per trigger — REAL multi-batch ingest for the
-    streaming operators (B17/B19). Keyed on the resolved source path +
-    ``salt`` (two datasets sharing a basename never collide; two operators
-    staging different splits of the same table don't either) with a
-    _SUCCESS reuse check, so the write happens once per dataset — the
-    operator-persisted-state rule from CLAUDE.md."""
-    import hashlib
-    import uuid as _uuid
-
-    target = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
-    # parts is part of the cache key: a caller changing the file count
-    # must re-stage, not silently reuse the old batch geometry (CLAUDE.md:
-    # persisted state keyed by resolved-source-path PLUS params)
-    key = hashlib.md5(f"{target}:{salt}:{parts}".encode()).hexdigest()[:12]
-    stage = os.path.join(SCRATCH, "streams", f"{salt}_{key}.parquet")
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
-        return stage
-    # First-ever staging can RACE across processes (the _SUCCESS check is
-    # not a lock). Each racer builds its own private dir and publishes it
-    # with an atomic symlink swap — never two writers in one dir, and a
-    # reader that already resolved the old link keeps its intact build
-    # dir. Losers' builds leak only under concurrency, bounded by it.
-    import shutil
-
-    build = f"{stage}.build-{_uuid.uuid4().hex[:8]}"
-    df.repartition(parts).write.mode("overwrite").parquet(build)
-    for _attempt in range(2):
-        tmp_link = f"{stage}.lnk-{_uuid.uuid4().hex[:8]}"
-        os.symlink(build, tmp_link)
-        try:
-            os.replace(tmp_link, stage)
-            return stage
-        except OSError:
-            os.unlink(tmp_link)
-            # Only "stage exists as a real, COMPLETE dir" makes the build
-            # redundant (r9 advice). An INCOMPLETE real dir (a crashed
-            # pre-symlink run) is REPAIRED — removed so the complete
-            # build publishes in its place on the retry — rather than
-            # left to force a fresh leaked build copy on every future
-            # call (r10 review). If the retry still fails (concurrent
-            # repairer won, EACCES), the known-complete build dir is the
-            # safe fallback.
-            if os.path.exists(os.path.join(stage, "_SUCCESS")):
-                return stage
-            shutil.rmtree(stage, ignore_errors=True)
-    return build
+    streaming operators (B17/B19). An ``artifact`` keyed on the resolved
+    source path + ``salt`` + ``parts`` (two operators staging different
+    splits of the same table never collide; a changed file count
+    re-stages), so the write happens once per dataset."""
+    path, _ = artifact(
+        "streams", [os.path.join(sf_dir, f"{table}.parquet")], ("drop", salt, parts),
+        lambda d: df.repartition(parts).write.mode("overwrite").parquet(d),
+    )
+    return path
 
 
 def stage_keyed_file_drop(df: DataFrame, sf_dir: str, table: str,
@@ -114,45 +168,30 @@ def stage_keyed_file_drop(df: DataFrame, sf_dir: str, table: str,
     batch (content % parts == batch_id) so a listing-order change fails
     loudly instead of silently desynchronizing the oracle.
 
-    Same persistence contract as stage_multi_file_drop: keyed on resolved
-    source path + salt + parts with a _SUCCESS reuse check, built in a
-    private dir and published by atomic symlink swap.
+    Same persistence contract as stage_multi_file_drop, with ``key_col``
+    in the key too.
     """
-    import hashlib
     import shutil
     import time as _time
-    import uuid as _uuid
 
-    target = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
-    key = hashlib.md5(f"{target}:{salt}:{parts}:{key_col}".encode()).hexdigest()[:12]
-    stage = os.path.join(SCRATCH, "streams", f"{salt}_{key}.parquet")
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
-        return stage
-    build = f"{stage}.build-{_uuid.uuid4().hex[:8]}"
-    os.makedirs(build, exist_ok=True)
-    base = _time.time() - parts * 10
-    for k in range(parts):
-        tmp = os.path.join(build, f".tmp{k}")
-        (df.where(F.expr(f"{key_col} % {parts} = {k}"))
-           .coalesce(1).write.mode("overwrite").parquet(tmp))
-        part = next(f for f in os.listdir(tmp)
-                    if f.endswith(".parquet") and not f.startswith("."))
-        os.replace(os.path.join(tmp, part), os.path.join(build, f"{k:04d}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(os.path.join(build, f"{k:04d}.parquet"), (base + k * 10, base + k * 10))
-    open(os.path.join(build, "_SUCCESS"), "w").close()
-    for _attempt in range(2):
-        tmp_link = f"{stage}.lnk-{_uuid.uuid4().hex[:8]}"
-        os.symlink(build, tmp_link)
-        try:
-            os.replace(tmp_link, stage)
-            return stage
-        except OSError:
-            os.unlink(tmp_link)
-            if os.path.exists(os.path.join(stage, "_SUCCESS")):
-                return stage
-            shutil.rmtree(stage, ignore_errors=True)
-    return build
+    def build(d: str) -> None:
+        base = _time.time() - parts * 10
+        for k in range(parts):
+            tmp = os.path.join(d, f".tmp{k}")
+            (df.where(F.expr(f"{key_col} % {parts} = {k}"))
+               .coalesce(1).write.mode("overwrite").parquet(tmp))
+            part = next(f for f in os.listdir(tmp)
+                        if f.endswith(".parquet") and not f.startswith("."))
+            out = os.path.join(d, f"{k:04d}.parquet")
+            os.replace(os.path.join(tmp, part), out)
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.utime(out, (base + k * 10, base + k * 10))
+
+    path, _ = artifact(
+        "streams", [os.path.join(sf_dir, f"{table}.parquet")],
+        ("keyed_drop", salt, parts, key_col), build,
+    )
+    return path
 
 
 def file_stream(

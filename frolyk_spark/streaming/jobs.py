@@ -53,7 +53,8 @@ from pyspark.sql import functions as F
 from frolyk_spark.operators.dedup import _dedup_incremental_sql
 from frolyk_spark.operators.graph import ORACLES as _graph_oracles
 from frolyk_spark.sources.catalog import load_table
-from frolyk_spark.sources.streams import SCRATCH, events_stream, stage_stream_dir  # noqa: F401
+from frolyk_spark.sources import streams
+from frolyk_spark.sources.streams import _pid_alive, events_stream, stage_stream_dir  # noqa: F401
 
 #: session gap for session windows
 SESSION_GAP = "30 minutes"
@@ -84,17 +85,6 @@ TS_US_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_US_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
-def _pid_alive(pid: int) -> bool:
-    """True if a process with this pid exists (EPERM counts as alive)."""
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
 #: result dirs THIS process created (and so may still be lazily reading).
 #: Anything under our pid root but not in here is a leftover from a dead
 #: process that happened to get our pid — safe to reclaim.
@@ -110,7 +100,7 @@ def _named_dir(kind: str, name: str) -> str:
     them instead. The owner write is NOT advisory — if it fails, the run
     would be sweepable while live, so the error propagates (the run could
     not have written its checkpoint/results into this dir either)."""
-    d = os.path.join(SCRATCH, kind, "named")
+    d = os.path.join(streams.SCRATCH, kind, "named")
     os.makedirs(d, exist_ok=True)
     # Atomic publish (temp + os.replace), never truncate-in-place: a
     # sweeper reading during a truncate window would see an empty file and
@@ -142,7 +132,7 @@ def _checkpoint_dir(name: str, *, named: bool = False) -> str:
     one-shot) runs live under pid<pid>/ — swept only once the owner
     process is dead; named resumable runs go through _named_dir."""
     if not named:
-        return os.path.join(SCRATCH, "checkpoints", f"pid{os.getpid()}", name)
+        return os.path.join(streams.SCRATCH, "checkpoints", f"pid{os.getpid()}", name)
     return _named_dir("checkpoints", name)
 
 
@@ -206,7 +196,7 @@ def _run_root(prefix: str, name: str | None = None) -> tuple[str, str]:
     if name is not None:
         return name, _named_dir("results", name)
     name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    root = os.path.join(SCRATCH, "results", f"pid{os.getpid()}", name)
+    root = os.path.join(streams.SCRATCH, "results", f"pid{os.getpid()}", name)
     _LIVE_RESULTS.add(root)
     return name, root
 
@@ -220,7 +210,7 @@ def _sweep_results() -> None:
     flat dirs (pre-pid layout) by mtime."""
     import time as _time
 
-    parent = os.path.join(SCRATCH, "results")
+    parent = os.path.join(streams.SCRATCH, "results")
     if not os.path.isdir(parent):
         return
     own = os.path.join(parent, f"pid{os.getpid()}")
@@ -256,7 +246,7 @@ def _sweep_checkpoints() -> None:
     fallback."""
     import time as _time
 
-    parent = os.path.join(SCRATCH, "checkpoints")
+    parent = os.path.join(streams.SCRATCH, "checkpoints")
     if not os.path.isdir(parent):
         return
     cutoff = _time.time() - 3600
@@ -429,6 +419,12 @@ def run_batches(
     orphan owner file would accumulate per run. ``stop_on_idle`` /
     ``drain_state``: see run_available_now."""
     spark = stream.sparkSession
+    _sweep_results()
+    # Checkpoints have no lazy readers (deleted below on every normal
+    # exit), so a SIGKILLed run's checkpoint would otherwise leak forever
+    # — sweep dead owners' dirs (liveness-guarded; see _sweep_checkpoints
+    # for the layout contract).
+    _sweep_checkpoints()
     ckpt = _checkpoint_dir(name, named=resume)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -497,12 +493,6 @@ def run_available_now(
     idle-stop would spin to its timeout (r10 review wave 2).
     """
     spark = df.sparkSession
-    _sweep_results()
-    # Checkpoints have no lazy readers (run_batches deletes them on every
-    # normal exit), so a SIGKILLed run's checkpoint would otherwise leak
-    # forever — sweep dead owners' dirs (liveness-guarded; see
-    # _sweep_checkpoints for the layout contract).
-    _sweep_checkpoints()
     name, out = _run_root(f"{prefix}_")
 
     # Each batch overwrites its OWN subdir (re-delivery replaces, never

@@ -99,7 +99,6 @@ def test_dedup_clusters_sizes_loop_from_signature_artifact(spark, sf_dir, monkey
     unsized loop pins the cores//2 floor with AQE off — a 100 TB spill
     risk)."""
     import frolyk_spark.operators.dedup as dd
-    from frolyk_spark.functions.loops import dir_bytes
 
     seen = {}
     orig = dd.min_label_clusters
@@ -110,7 +109,7 @@ def test_dedup_clusters_sizes_loop_from_signature_artifact(spark, sf_dir, monkey
 
     monkeypatch.setattr(dd, "min_label_clusters", spy)
     dd.dedup_clusters(spark, sf_dir).collect()
-    expect = dir_bytes(dd._minhash_signature_path(sf_dir))
+    _, expect = dd._minhash_artifact(spark, sf_dir)
     assert expect > 0
     assert seen["big_bytes"] == expect
 

@@ -1,6 +1,11 @@
 """Stream source builders (SURVEY §2 B8/B9): file, rate, kafka — all
 constructible without a broker; the file path is driven end-to-end."""
 
+import os
+import shutil
+import subprocess
+import sys
+
 import pytest
 
 from frolyk_spark.sources.kafka import kafka_reader, kafka_writer
@@ -236,3 +241,222 @@ def test_sample_weighted_plan_and_bias(spark, sf_dir):
         docs.where(docs.doc_id.isin(list(a))).agg({"n_chars": "avg"}).collect()[0][0]
     )
     assert sample_mean > corpus_mean
+
+
+# --- streams.artifact: the one persisted-artifact component ----------------
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def art(tmp_path, monkeypatch):
+    """streams with SCRATCH redirected to a fresh root, plus one source
+    file to key artifacts on."""
+    from frolyk_spark.sources import streams
+
+    monkeypatch.setattr(streams, "SCRATCH", str(tmp_path / "scratch"))
+    src = tmp_path / "table.parquet"
+    src.write_bytes(b"src")
+    return streams, str(src)
+
+
+def _writer(*texts, calls=None):
+    """A plain-Python build: one part file per text."""
+    def build(d):
+        if calls is not None:
+            calls.append(d)
+        for i, text in enumerate(texts):
+            with open(os.path.join(d, f"part-{i}"), "w") as fh:
+                fh.write(text)
+    return build
+
+
+def _no_build(d):
+    raise AssertionError("a complete artifact must be reused, not rebuilt")
+
+
+def _failing_build(d):
+    with open(os.path.join(d, "part-0"), "w") as fh:
+        fh.write("half")
+    raise RuntimeError("build failed")
+
+
+def _key_link(streams, kind):
+    root = os.path.join(streams.SCRATCH, kind)
+    [key] = [e for e in os.listdir(root) if ".build-" not in e]
+    return os.path.join(root, key)
+
+
+def _child(code, *args):
+    """Run ``code`` in a fresh interpreter (no Spark session), repo on the
+    path; returns the Popen."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p))
+    return subprocess.Popen(
+        [sys.executable, "-c", code, *args], env=env, cwd=_REPO,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+
+
+def test_artifact_builds_once_and_repairs_half_written_state(art):
+    streams, src = art
+    calls = []
+    path, nbytes = streams.artifact("k", [src], ("p",), _writer("ab", "cde", calls=calls))
+    assert len(calls) == 1 and nbytes == 5
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0", "part-1"]
+    link = _key_link(streams, "k")
+    assert os.path.islink(link) and os.path.realpath(link) == path
+    assert streams.artifact("k", [src], ("p",), _no_build) == (path, 5)
+
+    # a crashed writer's real dir at the key: files, no _SUCCESS
+    os.unlink(link)
+    shutil.rmtree(path)
+    os.makedirs(link)
+    with open(os.path.join(link, "part-0"), "w") as fh:
+        fh.write("a")
+    path2, nbytes2 = streams.artifact("k", [src], ("p",), _writer("ab", "cde", calls=calls))
+    assert len(calls) == 2 and nbytes2 == 5
+    assert os.path.islink(link) and os.path.realpath(link) == path2
+
+    # a link whose target is gone is repaired too
+    shutil.rmtree(path2)
+    path3, _ = streams.artifact("k", [src], ("p",), _writer("ab", "cde", calls=calls))
+    assert len(calls) == 3 and os.path.exists(os.path.join(path3, "_SUCCESS"))
+
+    # a failed build leaves nothing behind and publishes nothing
+    shutil.rmtree(path3)
+    with pytest.raises(RuntimeError, match="build failed"):
+        streams.artifact("k", [src], ("p",), _failing_build)
+    assert [e for e in os.listdir(os.path.dirname(link)) if ".build-" in e] == []
+
+
+def test_artifact_key_is_resolved_sources_plus_params(art, tmp_path):
+    streams, src = art
+    a, _ = streams.artifact("k", [src], ("p", 1), _writer("one"))
+    b, _ = streams.artifact("k", [src], ("p", 2), _writer("two"))
+    assert a != b
+    with open(os.path.join(b, "part-0")) as fh:
+        assert fh.read() == "two"
+    # a symlinked alias of the same source is the same artifact; the
+    # source list's order does not matter; another kind is another root
+    alias = tmp_path / "alias.parquet"
+    os.symlink(src, alias)
+    assert streams.artifact("k", [str(alias)], ("p", 1), _no_build)[0] == a
+    other = tmp_path / "other.parquet"
+    other.write_bytes(b"o")
+    ab, _ = streams.artifact("k", [src, str(other)], ("p", 1), _writer("ab"))
+    assert streams.artifact("k", [str(other), src], ("p", 1), _no_build)[0] == ab
+    assert streams.artifact("k2", [src], ("p", 1), _writer("x"))[0] != a
+
+
+_RACER = r"""
+import json, os, sys, time
+from frolyk_spark.sources import streams
+
+streams.SCRATCH, src, gate = sys.argv[1:4]
+me = str(os.getpid())
+
+
+def wait_for(prefix):
+    deadline = time.time() + 60
+    while len([f for f in os.listdir(gate) if f.startswith(prefix)]) < 2:
+        assert time.time() < deadline, "the other builder never arrived"
+        time.sleep(0.02)
+
+
+def build(d):
+    for i in range(3):
+        with open(os.path.join(d, f"part-{me}-{i}"), "w") as fh:
+            fh.write(me)
+    open(os.path.join(gate, f"built-{me}"), "w").close()
+    wait_for("built-")  # both builds are complete before either publishes
+
+
+path, nbytes = streams.artifact("race", [src], ("p",), build)
+files = sorted(os.listdir(path))
+open(os.path.join(gate, f"published-{me}"), "w").close()
+wait_for("published-")  # the other builder has published or lost too
+assert sorted(os.listdir(path)) == files
+owners = sorted({open(os.path.join(path, f)).read() for f in files if f != "_SUCCESS"})
+print(json.dumps({"path": path, "files": files, "owners": owners, "nbytes": nbytes}))
+"""
+
+
+def test_artifact_concurrent_builders_leave_one_valid_artifact(art, tmp_path):
+    import json
+
+    streams, src = art
+    gate = tmp_path / "gate"
+    gate.mkdir()
+    procs = [_child(_RACER, streams.SCRATCH, src, str(gate)) for _ in range(2)]
+    outs = []
+    for p in procs:
+        out, err = p.communicate(timeout=180)
+        assert p.returncode == 0, err
+        outs.append(json.loads(out.strip().splitlines()[-1]))
+    # both racers return the winner's dir; it holds exactly the winner's
+    # complete build, and the loser's build is gone
+    assert outs[0] == outs[1]
+    won = outs[0]
+    assert len(won["owners"]) == 1 and len(won["files"]) == 4
+    link = _key_link(streams, "race")
+    assert os.path.realpath(link) == won["path"]
+    assert sorted(os.listdir(os.path.dirname(link))) == sorted(
+        [os.path.basename(link), os.path.basename(won["path"])])
+
+
+_PUBLISHER = r"""
+import sys
+from frolyk_spark.sources import streams
+
+streams.SCRATCH, src = sys.argv[1:3]
+streams.artifact("k", [src], ("p",), lambda d: open(d + "/part-0", "w").write("x"))
+"""
+
+
+def test_artifact_reclaims_dead_builds_but_never_the_published_one(art):
+    streams, src = art
+    # the published build's owner is a finished process: a dead pid
+    p = _child(_PUBLISHER, streams.SCRATCH, src)
+    _, err = p.communicate(timeout=120)
+    assert p.returncode == 0, err
+    link = _key_link(streams, "k")
+    published = os.path.realpath(link)
+    dead = int(os.path.basename(published).split(".build-")[1].split("-")[0])
+    assert dead == p.pid and not streams._pid_alive(dead)
+    key = os.path.basename(link)
+    crashed = os.path.join(os.path.dirname(link), f"{key}.build-{dead}-0dead0ff")
+    live = os.path.join(os.path.dirname(link), f"{key}.build-{os.getpid()}-0live0ff")
+    for d in (crashed, live):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0"), "w") as fh:
+            fh.write("partial")
+
+    assert streams.artifact("k", [src], ("p",), _no_build)[0] == published
+    assert not os.path.exists(crashed)
+    assert os.path.exists(os.path.join(published, "_SUCCESS"))
+    assert os.path.isdir(live)  # a live owner's build is never touched
+
+
+@pytest.mark.parametrize("module, artifact_fn, builder, geometry", [
+    ("dedup", "_minhash_artifact", "minhash_signatures",
+     ("MINHASH_K", "MINHASH_SEEDS", "SHINGLE_W")),
+    ("multimodal", "_dhash_artifact", "_dhash_codes",
+     ("DHASH_GRID_X", "DHASH_GRID_Y", "IMG_W", "IMG_H", "IMG_GROUP")),
+])
+def test_signature_artifacts_key_on_their_geometry(
+    spark, sf_dir, art, monkeypatch, module, artifact_fn, builder, geometry,
+):
+    """A change to any constant that shapes the persisted codes builds a
+    new artifact instead of serving the old geometry's files."""
+    import importlib
+
+    mod = importlib.import_module(f"frolyk_spark.operators.{module}")
+    monkeypatch.setattr(mod, builder, lambda s, d: s.range(1))
+    fn = getattr(mod, artifact_fn)
+    base = fn(spark, sf_dir)[0]
+    assert fn(spark, sf_dir)[0] == base
+    for name in geometry:
+        value = getattr(mod, name)
+        with monkeypatch.context() as m:
+            m.setattr(mod, name, value[1:] if isinstance(value, tuple) else value + 1)
+            assert fn(spark, sf_dir)[0] != base, name

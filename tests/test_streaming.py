@@ -575,13 +575,14 @@ def test_stream_dedup_incremental_crash_resume(spark, sf_dir, monkeypatch):
     import uuid as _uuid
 
     from frolyk_spark.operators.dedup import dedup_incremental
-    from frolyk_spark.streaming.jobs import SCRATCH, stream_dedup_incremental
+    from frolyk_spark.sources import streams
+    from frolyk_spark.streaming.jobs import stream_dedup_incremental
 
     name = f"sdi_resume_{_uuid.uuid4().hex[:8]}"
     # named resumable checkpoints live under named/ with an owner-pid
     # liveness file (see jobs._checkpoint_dir) so the janitor never
     # reclaims a live run and a post-crash rerun can find it cross-process
-    ckpt = os.path.join(SCRATCH, "checkpoints", "named", name)
+    ckpt = os.path.join(streams.SCRATCH, "checkpoints", "named", name)
     with monkeypatch.context() as m, pytest.raises(Exception, match="injected crash"):
         _crash_runs(m, 2, after=False)
         stream_dedup_incremental(spark, sf_dir, _name=name)
@@ -1297,19 +1298,18 @@ def test_cdc_versioned_crash_after_commit_resumes_exactly_once(spark, sf_dir, mo
     equals B19's oracle-checked one-shot apply."""
     import uuid as _uuid
 
+    from frolyk_spark.sources import streams
     from frolyk_spark.sources.catalog import committed_txns
-    from frolyk_spark.streaming.jobs import (
-        SCRATCH, stream_cdc_apply, stream_cdc_versioned,
-    )
+    from frolyk_spark.streaming.jobs import stream_cdc_apply, stream_cdc_versioned
 
     name = f"cdcv_resume_{_uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(SCRATCH, "checkpoints", "named", name)
+    ckpt = os.path.join(streams.SCRATCH, "checkpoints", "named", name)
     with monkeypatch.context() as m, pytest.raises(Exception, match="injected crash"):
         _crash_runs(m, 1, after=True)
         stream_cdc_versioned(spark, sf_dir, _name=name)
     assert os.path.isdir(ckpt), "checkpoint must survive the crash"
     assert os.path.exists(f"{ckpt}.owner_pid")
-    root = os.path.join(SCRATCH, "results", "named", name)
+    root = os.path.join(streams.SCRATCH, "results", "named", name)
     before = committed_txns(root)
     assert "b1" in before, "crash landed after the commit — txn must exist"
 
@@ -2136,3 +2136,48 @@ def test_stateful_stream_equals_oracle_under_redelivery(
     df = jobs.QUERIES[name](spark, sf_dir)
     assert replayed, "the operator did not run through run_batches"
     compare_results(df, duck.sql(jobs.ORACLES[name]))
+
+
+def test_scratch_root_is_read_at_call_time(spark, sf_dir, tmp_path, monkeypatch):
+    """Redirecting ``streams.SCRATCH`` after ``jobs`` is imported moves a
+    run's checkpoint and results to the new root (the root is never bound
+    by value at import)."""
+    from frolyk_spark.sources import streams
+    from frolyk_spark.sources.streams import events_stream
+    from frolyk_spark.streaming import jobs
+
+    root = str(tmp_path / "scratch")
+    monkeypatch.setattr(streams, "SCRATCH", root)
+    ckpts = []
+
+    def hook(batch_df, batch_id):
+        own = os.path.join(root, "checkpoints", f"pid{os.getpid()}")
+        ckpts.extend(os.listdir(own) if os.path.isdir(own) else [])
+
+    out = jobs.run_available_now(
+        events_stream(spark, sf_dir).groupBy("event_type").count(),
+        mode="complete", prefix="rootmove", batch_hook=hook,
+    )
+    assert ckpts and all(c.startswith("rootmove_") for c in ckpts)
+    files = [f.removeprefix("file://") for f in out.inputFiles()]
+    assert files and all(f.startswith(os.path.join(root, "results")) for f in files)
+
+
+def test_direct_run_batches_caller_sweeps_dead_checkpoints(spark, sf_dir):
+    """A SIGKILLed run leaks its pid-scoped checkpoint root; the next run
+    of ANY run_batches caller (not only run_available_now) reclaims it."""
+    import subprocess
+    import sys
+
+    from frolyk_spark.sources import streams
+    from frolyk_spark.streaming.jobs import _pid_alive, stream_k_anonymity
+
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert not _pid_alive(int(dead))
+    leaked = os.path.join(streams.SCRATCH, "checkpoints", f"pid{dead}")
+    os.makedirs(os.path.join(leaked, "kanonmon_dead", "offsets"))
+    stream_k_anonymity(spark, sf_dir).collect()
+    assert not os.path.exists(leaked)
