@@ -49,8 +49,17 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiling aggregate pays), then a band roll-up over the
     group-cardinality frame — O(groups), never a second corpus pass.
     """
-    ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    groups = (
+    return k_band_histogram(
+        qi_groups(load_table(spark, sf_dir, "events").select("event_type", "ts", "value"))
+    )
+
+
+def qi_groups(ev: DataFrame) -> DataFrame:
+    """The audit's first level — the QI groupBy of an events frame to
+    (event_type, d, vb, k). Shared with the B27 streaming twin, which
+    applies it to the event stream as a native streaming aggregation, so
+    the QI definition cannot drift between the two."""
+    return (
         ev.select(
             "event_type",
             F.date_trunc("day", "ts").alias("d"),
@@ -59,6 +68,12 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "d", "vb")
         .agg(F.count(F.lit(1)).alias("k"))
     )
+
+
+def k_band_histogram(groups: DataFrame) -> DataFrame:
+    """The audit's second level — QI group sizes to the banded k
+    histogram, O(groups). Shared with the B27 streaming twin, which
+    applies it to its final aggregation state."""
     band = (
         F.when(F.col("k") == 1, "1")
         .when(F.col("k") <= 4, "2-4")

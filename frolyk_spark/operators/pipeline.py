@@ -330,7 +330,14 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, bucket) per partition. The whole operator is a single pass
     at any scale.
     """
-    docs = load_table(spark, sf_dir, "documents")
+    return length_hist(load_table(spark, sf_dir, "documents"))
+
+
+def length_hist(docs: DataFrame) -> DataFrame:
+    """(source, text) rows to the (source, len_bucket) → (n_docs,
+    n_tokens) histogram. Shared with the B33 streaming twin, which
+    applies it to the document stream as a native streaming
+    aggregation."""
     n_tokens = F.size(F.split("text", " "))
     # floor(log2(n)) for n >= 1, computed as bit_width(n) - 1 via the
     # binary-string length. Integer-exact on both engines — log2() is a

@@ -16,10 +16,10 @@ LLM-data-pipeline surface of the charter (SURVEY §2 D).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from frolyk_spark.functions.hashing import portable_hash_spark_sql, portable_hash_sql
+from frolyk_spark.functions.hashing import portable_hash_expr, portable_hash_spark_sql, portable_hash_sql
 from frolyk_spark.functions.portable import round4, round4_sql, round6, round6_sql
 from frolyk_spark.sources.catalog import load_table
 
@@ -71,6 +71,15 @@ LIMIT {VOCAB_K}
 """
 
 
+#: a ``text`` row's adjacent word pairs as one array, built JVM-side
+#: (see bigram_counts for the evaluation barrier)
+BIGRAMS = (
+    "transform(array(split(text, ' ')), ws -> "
+    "zip_with(slice(ws, 1, size(ws) - 1), slice(ws, 2, size(ws) - 1), "
+    "(a, b) -> concat(a, ' ', b)))[0]"
+)
+
+
 def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{BIGRAM_K} adjacent word pairs by corpus count — the candidate
     table a BPE trainer scores each merge iteration (word-level here; the
@@ -86,14 +95,9 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic boundary membership.
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
-    pairs_expr = (
-        "transform(array(split(text, ' ')), ws -> "
-        "zip_with(slice(ws, 1, size(ws) - 1), slice(ws, 2, size(ws) - 1), "
-        "(a, b) -> concat(a, ' ', b)))[0]"
-    )
     return (
         docs.repartition(spark.sparkContext.defaultParallelism)
-        .select(F.explode(F.expr(pairs_expr)).alias("pair"))
+        .select(F.explode(F.expr(BIGRAMS)).alias("pair"))
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), "pair")
@@ -368,8 +372,6 @@ def sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles distinct words, not corpus tokens) -> orderBy+limit, planned
     as TakeOrderedAndProject (per-partition K-row heap, K rows per
     partition to the driver merge, no global sort)."""
-    from frolyk_spark.functions.hashing import portable_hash_expr
-
     docs = load_table(spark, sf_dir, "documents").select("text")
     words = (
         docs.repartition(spark.sparkContext.defaultParallelism)
@@ -830,44 +832,47 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule), one groupBy(word) min over {CMS_D} joined rows. No all-pairs
     anywhere; the sketch is CMS_D*CMS_W cells at every SF.
     """
-    from frolyk_spark.functions.hashing import portable_hash_expr
     from frolyk_spark.functions.lineage import cut_lineage
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    # the bigram_counts pair kernel: transform(array(...))[0] is the
-    # evaluation barrier binding split() once per row (CLAUDE.md)
-    pairs_expr = (
-        "transform(array(split(text, ' ')), ws -> "
-        "zip_with(slice(ws, 1, size(ws) - 1), slice(ws, 2, size(ws) - 1), "
-        "(a, b) -> concat(a, ' ', b)))[0]"
-    )
     # pair counts feed both the cell aggregate and the estimate join —
     # cut or Spark recomputes the corpus scan per side
     wc = cut_lineage(
         docs.repartition(spark.sparkContext.defaultParallelism)
-        .select(F.explode(F.expr(pairs_expr)).alias("word"))
+        .select(F.explode(F.expr(BIGRAMS)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    wb = wc.select(
+    cells = (
+        _cms_rows(wc).groupBy("r", "bucket")
+        .agg(F.sum("cnt").cast("bigint").alias("tot"))
+    )
+    return cms_estimate(wc, cells)
+
+
+def cms_bucket(r: Column) -> Column:
+    """The cell of ``word`` in sketch row ``r``: the row-salted portable
+    hash mod {CMS_W}."""
+    return portable_hash_expr(
+        F.concat(F.lit("cms"), r.cast("string"), F.lit(":"), F.col("word"))
+    ) % CMS_W
+
+
+def _cms_rows(wc: DataFrame) -> DataFrame:
+    """(word, cnt) to one (word, cnt, r, bucket) row per sketch row."""
+    return wc.select(
         "word",
         "cnt",
         F.explode(F.array(*[F.lit(r) for r in range(CMS_D)])).alias("r"),
-    ).withColumn(
-        "bucket",
-        portable_hash_expr(
-            F.concat(
-                F.lit("cms"), F.col("r").cast("string"), F.lit(":"), F.col("word")
-            )
-        )
-        % CMS_W,
-    )
-    cells = (
-        wb.groupBy("r", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("tot"))
-    )
+    ).withColumn("bucket", cms_bucket(F.col("r")))
+
+
+def cms_estimate(wc: DataFrame, cells: DataFrame) -> DataFrame:
+    """D81's output from exact (word, cnt) counts and the (r, bucket,
+    tot) sketch cells: each word's estimate is its min cell. Shared with
+    the B31 streaming twin, which feeds its aggregation state."""
     return (
-        wb.join(F.broadcast(cells), ["r", "bucket"])
+        _cms_rows(wc).join(F.broadcast(cells), ["r", "bucket"])
         .groupBy("word")
         .agg(
             F.min("tot").cast("bigint").alias("est_count"),
@@ -960,11 +965,19 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("new_words"))
     )
+    return vocab_curve(spark, per_doc, firsts)
+
+
+def vocab_curve(spark: SparkSession, slices: DataFrame, new_words: DataFrame) -> DataFrame:
+    """D82's curve from per-slice (bucket, n_docs_b, toks) sums and
+    per-slice (bucket, new_words) counts, over the {VG_BUCKETS}-row
+    spine. Shared with the B32 streaming twin, which feeds its
+    aggregation state."""
     spine = spark.range(VG_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        spine.join(per_doc, "bucket", "left")
-        .join(firsts, "bucket", "left")
+        spine.join(slices, "bucket", "left")
+        .join(new_words, "bucket", "left")
         .select(
             "bucket",
             F.coalesce("n_docs_b", F.lit(0)).cast("bigint").alias("n_docs_b"),

@@ -39,6 +39,15 @@ one-scalar versions, keep >= 2 retention). An operator supplies only its
 per-batch body and its final read — the frolyk Task shape, where the
 framework owns assignment, commits and restart and the caller supplies
 the processor.
+
+Cross-batch state that merges by count, sum, min or max is not hand-rolled
+at all: the operator applies its batch twin's first-level aggregate to
+the file stream, runs it through ``run_available_now(mode="complete")``
+(Spark's state store owns the state and its redelivery), and applies the
+batch twin's second level to the returned state — the B27/B31/B32/B33/
+B35/B37 monitors. ``VersionedState`` is only for state such an
+aggregation cannot express: bottom-k, keep-first, label propagation,
+per-batch version lineage, txn-guarded and batching-dependent bodies.
 """
 
 from __future__ import annotations
@@ -531,6 +540,16 @@ def run_available_now(
         # no batch fired (empty source): preserve the output schema
         return spark.createDataFrame([], df.schema)
     return spark.read.parquet(*paths)
+
+
+def _drop_stream(df: DataFrame, stage: str) -> DataFrame:
+    """``df``'s staged multi-file drop as a file stream that takes one
+    file per trigger: real multi-batch ingest."""
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+    )
 
 
 # --- B1: tumbling-window aggregate ------------------------------------------
@@ -1432,9 +1451,7 @@ def stream_session_ttl_proc(
             state.setTimeoutDuration(idle_ms)
 
     out = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+        _drop_stream(ev, stage)
         .groupBy("user_id")
         .applyInPandasWithState(
             fold,
@@ -1537,11 +1554,7 @@ def stream_cdc_apply(
             batch = _cdc_merge(spark.read.parquet(state.path(prior_v)), batch)
         state.write(batch_id, batch)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(ev, stage)
     run_batches(stream, _apply, name=name)
     v = state.latest()
     if v is None:
@@ -1641,11 +1654,7 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_codes.unpersist()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(docs, stage)
     run_batches(stream, _probe, name=name)
     dirs = out.paths("pairs")
     if not dirs:
@@ -1740,11 +1749,7 @@ def stream_cdc_versioned(
             # their states are no longer reachable for time travel either
             vacuum_versioned(root, keep_last=keep_versions, grace_seconds=0.0)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(ev, stage)
     run_batches(stream, _apply, name=name, resume=_name is not None)
     try:
         final = read_versioned(spark, root)
@@ -1875,11 +1880,7 @@ def stream_dedup_incremental(
         finally:
             batch_bands.unpersist()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(docs, stage)
     try:
         run_batches(stream, _probe, name=name, resume=_name is not None)
     finally:
@@ -2104,11 +2105,7 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch = _bottom_k(prior.unionByName(batch))
         state.write(batch_id, batch.coalesce(1))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(docs, stage)
     run_batches(stream, _apply, name=name)
     v = state.latest()
     if v is None:
@@ -2246,113 +2243,32 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- B27: streaming k-anonymity monitor ----------------------------------------
 
-def _null_safe_add_merge(
-    prior: DataFrame, batch: DataFrame, keys: list[str], val: str
-) -> DataFrame:
-    """Full-outer ADD-merge of two keyed count frames whose KEY columns
-    may be NULL (r15 review): plain join equality does not match NULL
-    keys while groupBy treats NULLs as one group (the CLAUDE.md r9
-    outer-join rule), so a NULL-keyed group would append a fresh state
-    row per batch instead of merging — fatal where the consumer COUNTS
-    state rows (B37's distinct-l). Joins with eqNullSafe on every key;
-    keys re-emerge via coalesce across sides."""
-    p = prior.select(
-        *[F.col(k).alias(f"_p_{k}") for k in keys], F.col(val).alias("_pv")
-    )
-    b = batch.select(
-        *[F.col(k).alias(f"_b_{k}") for k in keys], F.col(val).alias("_bv")
-    )
-    cond = None
-    for k in keys:
-        e = F.col(f"_p_{k}").eqNullSafe(F.col(f"_b_{k}"))
-        cond = e if cond is None else (cond & e)
-    zero = F.lit(0).cast("bigint")
-    return p.join(b, cond, "full_outer").select(
-        *[F.coalesce(f"_p_{k}", f"_b_{k}").alias(k) for k in keys],
-        (F.coalesce("_pv", zero) + F.coalesce("_bv", zero)).alias(val),
-    )
-
-
 def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous privacy monitoring (B27): the C68 k-anonymity audit
-    maintained as STREAMING STATE — each micro-batch reduces to
-    quasi-identifier counts and merges them into a versioned state table
-    (counts ADD, so the final state equals the whole-corpus groupBy
-    REGARDLESS of how ingest was batched — the B19/B17
-    batching-invariance contract, which is why this job shares C68's
-    oracle verbatim). The governance posture this enables: the privacy
-    gate is evaluated continuously as data lands, not in a nightly batch
-    after a leaky corpus already shipped.
+    maintained as STREAMING STATE. The batch audit's first level (the QI
+    groupBy, governance.qi_groups) runs over the event stream as a native
+    complete-mode streaming aggregation; counts ADD, so the state after
+    the last batch equals the whole-corpus groupBy REGARDLESS of how
+    ingest was batched — the B19/B17 batching-invariance contract, which
+    is why this job shares C68's oracle verbatim. The audit's second
+    level (governance.k_band_histogram) is an O(groups) view over that
+    state. The governance posture this enables: the privacy gate is
+    evaluated continuously as data lands, not in a nightly batch after a
+    leaky corpus already shipped.
 
-    Per batch: one map-side-combinable QI groupBy over the batch, one
-    keyed full-outer merge against the latest state version strictly
-    below this batch id (redelivery rebuilds from its own predecessor —
-    never double-counts), one state overwrite. The k-band histogram is a
-    view over the final state's group-cardinality frame: O(groups).
+    Spark's state store owns the O(QI groups) state, including NULL-keyed
+    groups and a redelivered batch; session.enable_rocksdb_state_store
+    is the path for state larger than the default provider holds.
     """
-    from frolyk_spark.operators.governance import K_MIN, VALUE_BUCKET
+    from frolyk_spark.operators.governance import k_band_histogram, qi_groups
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     stage = stage_multi_file_drop(ev, sf_dir, "events", "kanonmon")
-
-    name, root = _run_root("kanonmon_")
-    state = VersionedState(root)
-
-    def _reduce(batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.select(
-                "event_type",
-                F.date_trunc("day", "ts").alias("d"),
-                F.floor(F.col("value") / VALUE_BUCKET).cast("bigint").alias("vb"),
-            )
-            .groupBy("event_type", "d", "vb")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-        )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch = _reduce(batch_df)
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            batch = _null_safe_add_merge(
-                spark.read.parquet(state.path(prior_v)), batch,
-                ["event_type", "d", "vb"], "k",
-            )
-        state.write(batch_id, batch)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    state = run_available_now(
+        qi_groups(_drop_stream(ev, stage)), mode="complete", prefix="kanonmon"
     )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "k_band string, n_groups bigint, n_rows bigint, "
-                "violates_policy boolean",
-        )
-    final = spark.read.parquet(state.path(v))
-    band = (
-        F.when(F.col("k") == 1, "1")
-        .when(F.col("k") <= 4, "2-4")
-        .when(F.col("k") <= 9, "5-9")
-        .when(F.col("k") <= 99, "10-99")
-        .otherwise("100+")
-    )
-    return (
-        final.select(band.alias("k_band"), "k")
-        .groupBy("k_band")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-            F.sum("k").cast("bigint").alias("n_rows"),
-            F.min("k").alias("min_k"),
-        )
-        .select(
-            "k_band", "n_groups", "n_rows",
-            (F.col("min_k") < K_MIN).alias("violates_policy"),
-        )
-    )
+    return k_band_histogram(state)
 
 
 # --- B37: streaming l-diversity monitor (twin of the C68b audit) ---------------
@@ -2361,64 +2277,34 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous attribute-disclosure monitoring (B37, r14 verdict item
     6): the l_diversity_audit maintained as STREAMING STATE. The state is
-    the (QI, sensitive-value) pair-count table — exactly the batch
-    audit's own first-level aggregate — and counts ADD across batches,
-    so the accumulated state equals the whole-corpus first level
-    REGARDLESS of batching (the B17/B19/B27 batching-invariance class)
-    and the job shares L_DIVERSITY_SQL verbatim. A group's distinct-l is
-    the count of its state rows: a pair's presence is monotone
-    (first-seen-and-stays, the B32 MIN posture for the membership bit,
-    carried here by the count row itself), so l only ever grows as data
-    lands — the gate can flip from violating to passing live, never
-    silently the other way.
+    the (QI, sensitive-value) pair-count table — the batch audit's own
+    first level (governance.qi_pairs), run over the event stream as a
+    native complete-mode streaming aggregation — and counts ADD across
+    batches, so the state after the last batch equals the whole-corpus
+    first level REGARDLESS of batching (the B17/B19/B27
+    batching-invariance class) and the job shares L_DIVERSITY_SQL
+    verbatim. A group's distinct-l is the count of its state rows: a
+    pair's presence is monotone (first-seen-and-stays), so l only ever
+    grows as data lands — the gate can flip from violating to passing
+    live, never silently the other way. That count needs every group,
+    NULL-keyed ones included, to be ONE state row; the streaming
+    aggregation keys NULLs exactly as groupBy does.
 
-    Per batch: one map-side-combinable (QI, sensitive) groupBy over the
-    batch, one keyed full-outer add-merge against the latest state
-    version strictly below this batch id (redelivery rebuilds from its
-    own predecessor — never double-counts), one state overwrite. The
-    l-band histogram is a view over the final state: O(pairs), bounded
-    by QI-groups x |sensitive domain|.
+    The l-band histogram is the batch audit's second level
+    (governance.l_band_histogram) over the final state: O(pairs),
+    bounded by QI-groups x |sensitive domain|.
+    session.enable_rocksdb_state_store is the path for state larger than
+    the default provider holds.
     """
+    from frolyk_spark.operators.governance import l_band_histogram, qi_pairs
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     stage = stage_multi_file_drop(ev, sf_dir, "events", "ldivmon")
-
-    name, root = _run_root("ldivmon_")
-    state = VersionedState(root)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # the per-batch reduce IS the batch audits' first level — one
-        # shared definition (r15 second review), so the shared-state
-        # claim can't drift
-        from frolyk_spark.operators.governance import qi_pairs
-
-        batch = qi_pairs(batch_df)
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            batch = _null_safe_add_merge(
-                spark.read.parquet(state.path(prior_v)), batch,
-                ["d", "vb", "event_type"], "c",
-            )
-        state.write(batch_id, batch)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    state = run_available_now(
+        qi_pairs(_drop_stream(ev, stage)), mode="complete", prefix="ldivmon"
     )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "l_band string, n_groups bigint, n_rows bigint, "
-                "violates_policy boolean",
-        )
-    from frolyk_spark.operators.governance import l_band_histogram
-
-    # the final view IS the batch audit's second level — one shared
-    # definition (r15 review), so the oracle-sharing claim can't drift
-    return l_band_histogram(spark.read.parquet(state.path(v)))
+    return l_band_histogram(state)
 
 
 # --- B26: streaming tokenize -> pack training-data feed ------------------------
@@ -2595,156 +2481,51 @@ FROM c
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming frequency sketch (B31): D81's Count-Min sketch maintained
     as MERGEABLE state — the deployment a CMS exists for. Documents arrive
-    in micro-batches; each batch reduces to its bigram counts and its
-    {CMS_D}x{CMS_W} cell increments, and both ADD into versioned state
-    (counts add and the hash family is fixed, so cells add too — the
-    B19/B17 batching-invariance contract; the job therefore shares D81's
-    whole-corpus oracle verbatim).
+    in micro-batches, and ONE native complete-mode streaming aggregation
+    keeps both the {CMS_D}x{CMS_W} cells and the exact bigram counts:
+    each bigram occurrence emits one (word, r=-1) row for its exact count
+    and one (NULL word, r, bucket) row per sketch row for its cell, and
+    the state counts rows per (word, r, bucket). Counts add and the hash
+    family is fixed, so cells add too — the B19/B17 batching-invariance
+    contract; the final estimate is D81's own (vocab.cms_estimate) over
+    that state, so the job shares D81's whole-corpus oracle verbatim.
 
-    The cell state is the point: it stays <= CMS_D*CMS_W rows FOREVER on
+    The cell side is the point: it stays <= CMS_D*CMS_W rows FOREVER on
     an unbounded ingest — the bounded-memory frequency monitor a 100 TB
-    feed keeps per shard and adds at the coordinator. The exact bigram
-    counts ride along as a second mergeable state side purely because
-    D81's audit output reports estimate vs truth; a production monitor
-    would drop that side and keep only the 1024 cells.
-
-    Per batch, priced in Spark jobs (the B25 census): ONE side-partitioned
-    state write (side=words / side=cells — the r12 fusion template; the
-    full-outer merges against the latest prior version are inputs to that
-    single action). Redelivery rebuilds from the batch's own predecessor
-    version — never double-counts.
+    feed keeps per shard and adds at the coordinator. The exact counts
+    ride along purely because D81's audit output reports estimate vs
+    truth; a production monitor would drop them and keep only the 1024
+    cells. session.enable_rocksdb_state_store is the path for state
+    larger than the default provider holds.
     """
-    from frolyk_spark.functions.hashing import portable_hash_expr
-    from frolyk_spark.operators.vocab import CMS_D, CMS_K, CMS_W
+    from frolyk_spark.operators.vocab import BIGRAMS, CMS_D, cms_bucket, cms_estimate
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "cmsmon")
 
-    name, root = _run_root("cmsmon_")
-    state = VersionedState(root)
-
-    pairs_expr = (
-        "transform(array(split(text, ' ')), ws -> "
-        "zip_with(slice(ws, 1, size(ws) - 1), slice(ws, 2, size(ws) - 1), "
-        "(a, b) -> concat(a, ' ', b)))[0]"
+    exact = F.struct("word", F.lit(-1).alias("r"), F.lit(None).cast("bigint").alias("bucket"))
+    cells = [
+        F.struct(
+            F.lit(None).cast("string").alias("word"),
+            F.lit(r).alias("r"),
+            cms_bucket(F.lit(r)).alias("bucket"),
+        )
+        for r in range(CMS_D)
+    ]
+    rows = (
+        _drop_stream(docs, stage)
+        .select(F.explode(F.expr(BIGRAMS)).alias("word"))
+        .select(F.explode(F.array(exact, *cells)).alias("e"))
+        .select("e.*")
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        wc = (
-            batch_df.select(F.explode(F.expr(pairs_expr)).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        )
-        cells = (
-            wc.select(
-                "cnt",
-                F.explode(
-                    F.array(*[F.lit(r) for r in range(CMS_D)])
-                ).alias("r"),
-                "word",
-            )
-            .withColumn(
-                "bucket",
-                portable_hash_expr(
-                    F.concat(
-                        F.lit("cms"),
-                        F.col("r").cast("string"),
-                        F.lit(":"),
-                        F.col("word"),
-                    )
-                )
-                % CMS_W,
-            )
-            .groupBy("r", "bucket")
-            .agg(F.sum("cnt").cast("bigint").alias("tot"))
-        )
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(state.path(prior_v))
-            pw = prior.where(F.col("side") == "words").select(
-                "word", F.col("cnt").alias("cnt_prior")
-            )
-            wc = (
-                pw.join(wc, "word", "full_outer")
-                .select(
-                    "word",
-                    (
-                        F.coalesce("cnt_prior", F.lit(0).cast("bigint"))
-                        + F.coalesce("cnt", F.lit(0).cast("bigint"))
-                    ).alias("cnt"),
-                )
-            )
-            pc = prior.where(F.col("side") == "cells").select(
-                "r", "bucket", F.col("tot").alias("tot_prior")
-            )
-            cells = (
-                pc.join(cells, ["r", "bucket"], "full_outer")
-                .select(
-                    "r",
-                    "bucket",
-                    (
-                        F.coalesce("tot_prior", F.lit(0).cast("bigint"))
-                        + F.coalesce("tot", F.lit(0).cast("bigint"))
-                    ).alias("tot"),
-                )
-            )
-        state.write(batch_id, wc.select(
-            F.lit("words").alias("side"),
-            "word",
-            "cnt",
-            F.lit(None).cast("int").alias("r"),
-            F.lit(None).cast("bigint").alias("bucket"),
-            F.lit(None).cast("bigint").alias("tot"),
-        ).unionByName(
-            cells.select(
-                F.lit("cells").alias("side"),
-                F.lit(None).cast("string").alias("word"),
-                F.lit(None).cast("bigint").alias("cnt"),
-                F.col("r").cast("int").alias("r"),
-                "bucket",
-                "tot",
-            )
-        ))
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    state = run_available_now(
+        rows.groupBy("word", "r", "bucket").agg(F.count(F.lit(1)).alias("n")),
+        mode="complete", prefix="cmsmon",
     )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "word string, est_count bigint, true_count bigint, "
-                "overcount bigint",
-        )
-    final = spark.read.parquet(state.path(v))
-    wc = final.where(F.col("side") == "words").select("word", "cnt")
-    cells = final.where(F.col("side") == "cells").select("r", "bucket", "tot")
-    wb = wc.select(
-        "word",
-        "cnt",
-        F.explode(F.array(*[F.lit(r) for r in range(CMS_D)])).alias("r"),
-    ).withColumn(
-        "bucket",
-        portable_hash_expr(
-            F.concat(
-                F.lit("cms"), F.col("r").cast("string"), F.lit(":"), F.col("word")
-            )
-        )
-        % CMS_W,
-    )
-    return (
-        wb.join(F.broadcast(cells), ["r", "bucket"])
-        .groupBy("word")
-        .agg(
-            F.min("tot").cast("bigint").alias("est_count"),
-            F.max("cnt").cast("bigint").alias("true_count"),
-            (F.min("tot") - F.max("cnt")).cast("bigint").alias("overcount"),
-        )
-        .orderBy(F.desc("est_count"), "word")
-        .limit(CMS_K)
+    return cms_estimate(
+        state.where(F.col("r") < 0).select("word", F.col("n").alias("cnt")),
+        state.where(F.col("r") >= 0).select("r", "bucket", F.col("n").alias("tot")),
     )
 
 
@@ -2755,12 +2536,14 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Heaps-law monitor (B32): D82's vocabulary-growth curve
     maintained from MIN-mergeable state — the third mergeable-state class
     in the B block (B27 counts ADD, B29/B31 bottom-k/cells MERGE, here
-    first-occurrence = MIN, and min of mins is the min). Each micro-batch
-    reduces to (per-word min doc_id) + (per-range-slice doc/token sums),
-    and both merge into versioned state: min for the word side, add for
-    the slice side. Batching-invariant by construction, so the final
-    curve equals the one-shot D82 operator and shares its oracle
-    verbatim.
+    first-occurrence = MIN, and min of mins is the min). ONE native
+    complete-mode streaming aggregation over a unioned projection keeps
+    both sides: a (word, NULL bucket) row per token carrying its doc_id,
+    whose min is the word's first occurrence, and a (NULL word, bucket)
+    row per document carrying its token count, whose count and sum are
+    the range slice's doc/token sums. Batching-invariant by construction,
+    and the curve is D82's own (vocab.vocab_curve) over that state, so
+    the job shares D82's oracle verbatim.
 
     Why a stream wants this: the new-words-per-slice rate is the corpus
     drift alarm — a feed whose incoming slices suddenly mint vocabulary
@@ -2768,137 +2551,51 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees it as data lands rather than in a nightly batch.
 
     State is O(distinct words) + O({VG_BUCKETS}) — the model-sized
-    dimension (Heaps' law itself bounds its growth), joined UN-hinted per
-    the CLAUDE.md model-table rule. ONE side-partitioned state write per
-    batch (side=words / side=slices — the r12 fusion template);
-    redelivery rebuilds from the batch's own predecessor version.
+    dimension Heaps' law itself bounds; session.enable_rocksdb_state_store
+    is the path for state larger than the default provider holds.
     """
-    from frolyk_spark.operators.vocab import VG_BUCKETS
+    from frolyk_spark.operators.vocab import VG_BUCKETS, vocab_curve
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # slice geometry from the OBSERVED id span (scaffolding-only collect,
     # two scalars; never assumes density/0-base)
     mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    span = int(mx) - int(mn) + 1
-    bucket_expr = f"((doc_id - {int(mn)}) * {VG_BUCKETS}) div {span}"
-    stage = stage_multi_file_drop(docs, sf_dir, "documents", "vgrowth")
-
-    name, root = _run_root("vgrowth_")
-    state = VersionedState(root)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        firsts = (
-            batch_df.select(
-                "doc_id", F.explode(F.split("text", " ")).alias("word")
-            )
-            .groupBy("word")
-            .agg(F.min("doc_id").cast("bigint").alias("fd"))
-        )
-        slices = (
-            batch_df.select(
-                F.expr(bucket_expr).cast("bigint").alias("bucket"),
-                F.size(F.split("text", " ")).cast("bigint").alias("n_toks"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs_b"),
-                F.sum("n_toks").cast("bigint").alias("toks"),
-            )
-        )
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(state.path(prior_v))
-            pw = prior.where(F.col("side") == "words").select(
-                "word", F.col("fd").alias("fd_prior")
-            )
-            firsts = (
-                pw.join(firsts, "word", "full_outer")
-                .select(
-                    "word",
-                    F.least("fd_prior", "fd").alias("fd"),
-                )
-            )
-            ps = prior.where(F.col("side") == "slices").select(
-                "bucket",
-                F.col("n_docs_b").alias("nd_prior"),
-                F.col("toks").alias("tk_prior"),
-            )
-            slices = (
-                ps.join(slices, "bucket", "full_outer")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce("nd_prior", F.lit(0).cast("bigint"))
-                        + F.coalesce("n_docs_b", F.lit(0).cast("bigint"))
-                    ).alias("n_docs_b"),
-                    (
-                        F.coalesce("tk_prior", F.lit(0).cast("bigint"))
-                        + F.coalesce("toks", F.lit(0).cast("bigint"))
-                    ).alias("toks"),
-                )
-            )
-        state.write(batch_id, firsts.select(
-            F.lit("words").alias("side"),
-            "word",
-            "fd",
-            F.lit(None).cast("bigint").alias("bucket"),
-            F.lit(None).cast("bigint").alias("n_docs_b"),
-            F.lit(None).cast("bigint").alias("toks"),
-        ).unionByName(
-            slices.select(
-                F.lit("slices").alias("side"),
-                F.lit(None).cast("string").alias("word"),
-                F.lit(None).cast("bigint").alias("fd"),
-                "bucket",
-                "n_docs_b",
-                "toks",
-            )
-        ))
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
+    if mn is None:  # no documents: no id span to slice, so no curve
         return spark.createDataFrame(
             [], "bucket bigint, n_docs_b bigint, new_words bigint, "
                 "cum_tokens bigint, cum_vocab bigint",
         )
-    final = spark.read.parquet(state.path(v))
-    fb = (
-        final.where(F.col("side") == "words")
-        .select(F.expr(bucket_expr.replace("doc_id", "fd")).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("new_words"))
+
+    span = int(mx) - int(mn) + 1
+
+    def bucket_of(col: str):
+        return F.expr(f"(({col} - {int(mn)}) * {VG_BUCKETS}) div {span}").cast("bigint")
+
+    stage = stage_multi_file_drop(docs, sf_dir, "documents", "vgrowth")
+    stream = _drop_stream(docs, stage)
+    none = F.lit(None).cast("bigint")
+    rows = stream.select(
+        F.explode(F.split("text", " ")).alias("word"), none.alias("bucket"),
+        F.col("doc_id").cast("bigint").alias("fd"), none.alias("n_toks"),
+    ).unionByName(stream.select(
+        F.lit(None).cast("string").alias("word"), bucket_of("doc_id").alias("bucket"),
+        none.alias("fd"), F.size(F.split("text", " ")).cast("bigint").alias("n_toks"),
+    ))
+    state = run_available_now(
+        rows.groupBy("word", "bucket").agg(
+            F.min("fd").alias("fd"),
+            F.count("n_toks").alias("n_docs_b"),
+            F.sum("n_toks").alias("toks"),
+        ),
+        mode="complete", prefix="vgrowth",
     )
-    slices = final.where(F.col("side") == "slices").select(
-        "bucket", "n_docs_b", "toks"
-    )
-    spine = spark.range(VG_BUCKETS).select(
-        F.col("id").cast("bigint").alias("bucket")
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        spine.join(slices, "bucket", "left")
-        .join(fb, "bucket", "left")
-        .select(
-            "bucket",
-            F.coalesce("n_docs_b", F.lit(0)).cast("bigint").alias("n_docs_b"),
-            F.coalesce("new_words", F.lit(0)).cast("bigint").alias("new_words"),
-            F.coalesce("toks", F.lit(0)).cast("bigint").alias("toks"),
-        )
-        .select(
-            "bucket",
-            "n_docs_b",
-            "new_words",
-            F.sum("toks").over(w).cast("bigint").alias("cum_tokens"),
-            F.sum("new_words").over(w).cast("bigint").alias("cum_vocab"),
-        )
-        .orderBy("bucket")
+    return vocab_curve(
+        spark,
+        state.where(F.col("word").isNull()).select("bucket", "n_docs_b", "toks"),
+        state.where(F.col("word").isNotNull())
+        .groupBy(bucket_of("fd").alias("bucket"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("new_words")),
     )
 
 
@@ -3050,10 +2747,10 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch maintained as MERGEABLE state over an order-total ingest —
     completing the sketch family's streaming twins (B31→D81 frequencies,
     B32→D82 vocabulary, B33→D35 lengths, here quantiles). Bin counts ADD,
-    so per batch the state merge is one full-outer + coalesce-sum against
-    the batch's predecessor version (the batching-invariance class) and
-    the final inverse-CDF + exact audit reproduces C73's output exactly —
-    the job shares C73's whole-corpus oracle verbatim.
+    so the state is one native complete-mode streaming aggregation of
+    (bin, cnt) (the batching-invariance class), and the final
+    inverse-CDF + exact audit reproduces C73's output exactly — the job
+    shares C73's whole-corpus oracle verbatim.
 
     One subtlety C73's batch form doesn't have: the bin GEOMETRY (lo, hi)
     must be fixed BEFORE binning so every shard/batch bins identically —
@@ -3061,9 +2758,10 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere". Here the geometry comes from one bounded aggregate over
     the staged drop (in production: the table's E10 stats index or a
     declared domain), which equals C73's in-query geometry by
-    construction (same rows). State stays <= 256 bins FOREVER. Per
-    batch: ONE versioned-state write. The final inverse-CDF runs over
-    the MERGED STATE (the estimates genuinely come from the maintained
+    construction (same rows). State stays <= 256 bins FOREVER
+    (session.enable_rocksdb_state_store is the path should a wider sketch
+    outgrow the default provider). The final inverse-CDF runs over the
+    aggregation state (the estimates genuinely come from the maintained
     sketch — asserted by count conservation first); the exact-audit side
     legitimately reads the corpus once at the end, C73's shared
     _quantile_decile_audit doing both.
@@ -3078,55 +2776,27 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stage = stage_multi_file_drop(o, sf_dir, "orders", "qsketchmon")
 
-    name, root = _run_root("qsk_")
-    state = VersionedState(root)
-
     # fixed bin geometry, derived once from the staged drop (the E10
-    # stats read a production deployment would use) — never per batch
+    # stats read a production deployment would use) — never per batch.
+    # An empty drop has none, and bins no row either.
     geo = spark.read.parquet(stage).agg(
         F.min("cents").alias("lo"), F.max("cents").alias("hi")
     ).collect()[0]
-    lo, hi = geo.lo, geo.hi
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        bins = (
-            batch_df.select(
-                F.expr(
-                    f"((cents - {lo}L) * {QSKETCH_BINS}) div ({hi}L - {lo}L + 1)"
-                ).alias("bin")
-            )
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    lo, hi = geo.lo or 0, geo.hi or 0
+    bins = (
+        _drop_stream(o, stage)
+        .select(
+            F.expr(
+                f"((cents - {lo}L) * {QSKETCH_BINS}) div ({hi}L - {lo}L + 1)"
+            ).alias("bin")
         )
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(state.path(prior_v)).select(
-                "bin", F.col("cnt").alias("c0")
-            )
-            zero = F.lit(0).cast("bigint")
-            bins = prior.join(bins, "bin", "full_outer").select(
-                "bin",
-                (F.coalesce("c0", zero) + F.coalesce("cnt", zero)).alias("cnt"),
-            )
-        state.write(batch_id, bins)
-
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+        .groupBy("bin")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [],
-            "decile bigint, target_rank bigint, est_cents bigint, "
-            "exact_cents bigint, err_cents bigint",
-        )
-    final_bins = spark.read.parquet(state.path(v))
-    # count conservation: the merged state must account for every source
-    # row before anything is estimated from it
-    n_state = final_bins.agg(F.sum("cnt")).collect()[0][0]
+    final_bins = run_available_now(bins, mode="complete", prefix="qsk")
+    # count conservation: the state must account for every source row
+    # before anything is estimated from it
+    n_state = final_bins.agg(F.sum("cnt")).collect()[0][0] or 0
     n_src = o.count()
     if n_state != n_src:
         raise RuntimeError(
@@ -3303,11 +2973,7 @@ def stream_edge_degrees(
         finally:
             new_edges.unpersist()
 
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(li, stage)
     try:
         run_batches(stream, _apply, name=name)
     finally:
@@ -3721,11 +3387,7 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.write(batch_id, new_state)
         conv.write_scalar(batch_id, prior_conv and conv_b)
 
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _drop_stream(li, stage)
     run_batches(stream, _apply, name=name)
     v = labels.latest()
     if v is None:
@@ -3760,69 +3422,20 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-length histogram maintained as MERGEABLE state over a
     micro-batch ingest — the live dashboard a training-data intake keeps
     (a drop of long docs or a flood of short boilerplate shows up
-    mid-ingest, not after the crawl lands). Each batch reduces to its own
-    (source, len_bucket) → (n_docs, n_tokens) histogram; both measures
-    ADD, so the state merge is one full-outer + coalesce-sum against the
-    batch's predecessor version (the B17/B19/B27 batching-invariance
-    class) and the job shares D35's whole-corpus oracle verbatim. State
-    is bounded by sources × log2(max doc length) rows FOREVER —
-    dashboard-sized on an unbounded feed. Per batch, priced in Spark
-    jobs: ONE versioned-state write (redelivery rebuilds from the batch's
-    own predecessor — never double-counts)."""
+    mid-ingest, not after the crawl lands). The state is D35's own
+    aggregate (pipeline.length_hist) run over the document stream as a
+    native complete-mode streaming aggregation; both measures ADD (the
+    B17/B19/B27 batching-invariance class), so the job shares D35's
+    whole-corpus oracle verbatim. State is bounded by sources × log2(max
+    doc length) rows FOREVER — dashboard-sized on an unbounded feed
+    (session.enable_rocksdb_state_store is the path for larger state)."""
+    from frolyk_spark.operators.pipeline import length_hist
     from frolyk_spark.sources.streams import stage_multi_file_drop
 
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "lenmon")
-
-    name, root = _run_root("lenmon_")
-    state = VersionedState(root)
-
-    n_tokens = F.size(F.split("text", " "))
-    bucket = (F.length(F.bin(n_tokens)) - 1).cast("bigint")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        hist = (
-            batch_df.select(
-                "source",
-                bucket.alias("len_bucket"),
-                n_tokens.alias("n_tokens"),
-            )
-            .groupBy("source", "len_bucket")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-        )
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(state.path(prior_v)).select(
-                "source",
-                "len_bucket",
-                F.col("n_docs").alias("d0"),
-                F.col("n_tokens").alias("t0"),
-            )
-            zero = F.lit(0).cast("bigint")
-            hist = prior.join(hist, ["source", "len_bucket"], "full_outer").select(
-                "source",
-                "len_bucket",
-                (F.coalesce("d0", zero) + F.coalesce("n_docs", zero)).alias("n_docs"),
-                (F.coalesce("t0", zero) + F.coalesce("n_tokens", zero)).alias("n_tokens"),
-            )
-        state.write(batch_id, hist)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "source string, len_bucket bigint, n_docs bigint, n_tokens bigint"
-        )
-    return spark.read.parquet(state.path(v)).select(
-        "source", "len_bucket", "n_docs", "n_tokens"
+    return run_available_now(
+        length_hist(_drop_stream(docs, stage)), mode="complete", prefix="lenmon"
     )
 
 

@@ -50,6 +50,26 @@ def _crash_runs(monkeypatch, batch, *, after):
     monkeypatch.setattr(jobs, "run_batches", crashing_runs)
 
 
+def _record_batches(monkeypatch, probe=lambda batch_df: None):
+    """Record every jobs.run_batches micro-batch as ``(batch_id,
+    probe(batch_df))``, probed after the body ran. For a complete-mode
+    aggregation the batch frame is the whole state after that batch."""
+    from frolyk_spark.streaming import jobs
+
+    real = jobs.run_batches
+    seen = []
+
+    def recording_runs(stream, apply, **kw):
+        def recording(batch_df, batch_id):
+            apply(batch_df, batch_id)
+            seen.append((batch_id, probe(batch_df)))
+
+        real(stream, recording, **kw)
+
+    monkeypatch.setattr(jobs, "run_batches", recording_runs)
+    return seen
+
+
 def _run_foreach(spark, in_dir, ckpt, schema, max_files=None):
     """One availableNow run collecting every micro-batch's rows."""
     stream = spark.readStream.schema(schema)
@@ -1502,22 +1522,20 @@ def test_token_feed_offsets_continue_across_batches(spark, sf_dir):
     assert {r.doc_id: r.n_tokens for r in rows} == enc
 
 
-def test_stream_k_anonymity_matches_batch_audit(spark, sf_dir):
+def test_stream_k_anonymity_matches_batch_audit(spark, sf_dir, monkeypatch):
     """B27: the streaming monitor's final histogram must equal the batch
     audit exactly — the batching-invariance contract (cumulative QI
     counts add across batches), and the ingest must really have been
-    multi-batch (multiple state versions)."""
+    multi-batch (at least two batch ids)."""
     from frolyk_spark.operators.governance import k_anonymity_audit
     from frolyk_spark.streaming.jobs import stream_k_anonymity
 
+    seen = _record_batches(monkeypatch)
     got_df = stream_k_anonymity(spark, sf_dir)
     got = {tuple(r) for r in got_df.collect()}
     want = {tuple(r) for r in k_anonymity_audit(spark, sf_dir).collect()}
     assert got == want
-    src = got_df.inputFiles()[0].removeprefix("file://")
-    root = os.path.dirname(os.path.dirname(src))
-    versions = [d for d in os.listdir(root) if d.startswith("s") and d[1:].isdigit()]
-    assert len(versions) >= 2, "ingest was not multi-batch"
+    assert len({b for b, _ in seen}) >= 2, "ingest was not multi-batch"
 
 
 def test_stream_corpus_filter_equals_batch(spark, sf_dir):
@@ -1631,54 +1649,48 @@ def test_stream_asof_join_equals_batch(spark, sf_dir):
     )
 
 
-def test_stream_heavy_hitters_equals_batch_with_bounded_cells(spark, sf_dir):
+def test_stream_heavy_hitters_equals_batch_with_bounded_cells(
+    spark, sf_dir, monkeypatch
+):
     """B31: the streaming CMS's final estimates equal the one-shot D81
     operator (counts and cells both ADD — batching-invariant), the ingest
-    really was multi-batch, and the sketch side of EVERY state version is
-    bounded by CMS_D*CMS_W rows — the whole point of keeping a CMS on an
-    unbounded stream."""
-    import os
-
+    really was multi-batch, and the sketch side of the state after EVERY
+    batch is bounded by CMS_D*CMS_W rows — the whole point of keeping a
+    CMS on an unbounded stream."""
     from frolyk_spark.operators.vocab import CMS_D, CMS_W, heavy_hitters_cms
     from frolyk_spark.streaming.jobs import stream_heavy_hitters
 
+    seen = _record_batches(monkeypatch, lambda st: st.where("r >= 0").count())
     got_df = stream_heavy_hitters(spark, sf_dir)
     got = sorted(tuple(r) for r in got_df.collect())
     want = sorted(tuple(r) for r in heavy_hitters_cms(spark, sf_dir).collect())
     assert got == want and want
-    src = got_df.inputFiles()[0].removeprefix("file://")
-    root = os.path.dirname(os.path.dirname(src))
-    versions = [d for d in os.listdir(root) if d.startswith("s") and d[1:].isdigit()]
-    assert len(versions) >= 2, "ingest was not multi-batch"
-    for v in versions:
-        cells = spark.read.parquet(os.path.join(root, v)).where("side = 'cells'")
-        assert cells.count() <= CMS_D * CMS_W
+    assert len({b for b, _ in seen}) >= 2, "ingest was not multi-batch"
+    for _, cells in seen:
+        assert cells <= CMS_D * CMS_W
 
 
-def test_stream_length_histogram_equals_batch_with_bounded_state(spark, sf_dir):
+def test_stream_length_histogram_equals_batch_with_bounded_state(
+    spark, sf_dir, monkeypatch
+):
     """B33: the streaming length monitor's final histogram equals the
     one-shot D35 operator (doc and token counts both ADD — batching-
-    invariant), the ingest really was multi-batch, and EVERY state
-    version is bounded by sources × log2-buckets rows — the dashboard
-    contract on an unbounded feed."""
-    import os
-
+    invariant), the ingest really was multi-batch, and the state after
+    EVERY batch is bounded by sources × log2-buckets rows — the
+    dashboard contract on an unbounded feed."""
     from frolyk_spark.operators.pipeline import length_histogram
     from frolyk_spark.streaming.jobs import stream_length_histogram
 
+    seen = _record_batches(monkeypatch, lambda st: st.count())
     got_df = stream_length_histogram(spark, sf_dir)
     got = sorted(tuple(r) for r in got_df.collect())
     want = sorted(tuple(r) for r in length_histogram(spark, sf_dir).collect())
     assert got == want and want
-    src = got_df.inputFiles()[0].removeprefix("file://")
-    root = os.path.dirname(os.path.dirname(src))
-    versions = [d for d in os.listdir(root) if d.startswith("s") and d[1:].isdigit()]
-    assert len(versions) >= 2, "ingest was not multi-batch"
+    assert len({b for b, _ in seen}) >= 2, "ingest was not multi-batch"
     n_sources = got_df.select("source").distinct().count()
     max_bucket = max(r[1] for r in got)
-    for v in versions:
-        st = spark.read.parquet(os.path.join(root, v))
-        assert st.count() <= n_sources * (max_bucket + 1)
+    for _, rows in seen:
+        assert rows <= n_sources * (max_bucket + 1)
 
 
 def test_stream_edge_degrees_equals_batch_graph(spark, sf_dir):
@@ -1980,28 +1992,25 @@ def test_stream_components_equals_batch(spark, sf_dir):
     assert counts == sorted(counts) and counts[-1] == len(want)
 
 
-def test_stream_vocab_growth_equals_batch(spark, sf_dir):
+def test_stream_vocab_growth_equals_batch(spark, sf_dir, monkeypatch):
     """B32: the streaming growth monitor's final curve equals the one-shot
     D82 operator (first occurrence = MIN is mergeable; slice sums ADD),
-    the ingest really was multi-batch, and every state version carries
-    both sides."""
-    import os
-
+    the ingest really was multi-batch, and the state after every batch
+    carries both sides (word rows and slice rows)."""
     from frolyk_spark.operators.vocab import vocab_growth
     from frolyk_spark.streaming.jobs import stream_vocab_growth
 
+    def sides(st):
+        return {r[0] for r in st.select(F.col("word").isNull()).distinct().collect()}
+
+    seen = _record_batches(monkeypatch, sides)
     got_df = stream_vocab_growth(spark, sf_dir)
     got = sorted(tuple(r) for r in got_df.collect())
     want = sorted(tuple(r) for r in vocab_growth(spark, sf_dir).collect())
     assert got == want and want
-    src = got_df.inputFiles()[0].removeprefix("file://")
-    root = os.path.dirname(os.path.dirname(src))
-    versions = [d for d in os.listdir(root) if d.startswith("s") and d[1:].isdigit()]
-    assert len(versions) >= 2, "ingest was not multi-batch"
-    for v in versions:
-        st = spark.read.parquet(os.path.join(root, v))
-        sides = {r["side"] for r in st.select("side").distinct().collect()}
-        assert sides == {"words", "slices"}
+    assert len({b for b, _ in seen}) >= 2, "ingest was not multi-batch"
+    for _, both in seen:
+        assert both == {False, True}
 
 
 def test_stream_quantile_sketch_equals_batch(spark, sf_dir):
@@ -2016,7 +2025,58 @@ def test_stream_quantile_sketch_equals_batch(spark, sf_dir):
     assert got == want and want
 
 
-def test_stream_l_diversity_matches_batch_audit(spark, sf_dir):
+#: each counts-add stream twin: the table its drop stages and its output
+#: schema
+COUNTS_ADD_TWINS = {
+    "stream_k_anonymity": (
+        "events",
+        "k_band string, n_groups bigint, n_rows bigint, violates_policy boolean",
+    ),
+    "stream_l_diversity": (
+        "events",
+        "l_band string, n_groups bigint, n_rows bigint, violates_policy boolean",
+    ),
+    "stream_length_histogram": (
+        "documents",
+        "source string, len_bucket bigint, n_docs bigint, n_tokens bigint",
+    ),
+    "stream_heavy_hitters": (
+        "documents",
+        "word string, est_count bigint, true_count bigint, overcount bigint",
+    ),
+    "stream_vocab_growth": (
+        "documents",
+        "bucket bigint, n_docs_b bigint, new_words bigint, cum_tokens bigint, "
+        "cum_vocab bigint",
+    ),
+    "stream_quantile_sketch": (
+        "orders",
+        "decile bigint, target_rank bigint, est_cents bigint, "
+        "exact_cents bigint, err_cents bigint",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(COUNTS_ADD_TWINS))
+def test_counts_add_twin_over_empty_table(name, spark, sf_dir, tmp_path):
+    """A source table with zero rows (and its real schema) gives an empty
+    result with the operator's output schema."""
+    import pyarrow.parquet as pq
+
+    from frolyk_spark.streaming import jobs
+
+    table, schema = COUNTS_ADD_TWINS[name]
+    src = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+    pq.write_table(src.slice(0, 0), str(tmp_path / f"{table}.parquet"))
+    got = jobs.QUERIES[name](spark, str(tmp_path))
+    want = spark.createDataFrame([], schema).schema
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
+    assert got.collect() == []
+
+
+def test_stream_l_diversity_matches_batch_audit(spark, sf_dir, monkeypatch):
     """B37 (r15): the streaming monitor's final l-band histogram must
     equal the batch audit exactly — the state is the batch audit's own
     first-level (QI, sensitive) count table and counts add across
@@ -2025,36 +2085,43 @@ def test_stream_l_diversity_matches_batch_audit(spark, sf_dir):
     from frolyk_spark.operators.governance import l_diversity_audit
     from frolyk_spark.streaming.jobs import stream_l_diversity
 
+    seen = _record_batches(monkeypatch)
     got_df = stream_l_diversity(spark, sf_dir)
     got = {tuple(r) for r in got_df.collect()}
     want = {tuple(r) for r in l_diversity_audit(spark, sf_dir).collect()}
     assert got == want and want
-    src = got_df.inputFiles()[0].removeprefix("file://")
-    root = os.path.dirname(os.path.dirname(src))
-    versions = [d for d in os.listdir(root) if d.startswith("s") and d[1:].isdigit()]
-    assert len(versions) >= 2, "ingest was not multi-batch"
+    assert len({b for b, _ in seen}) >= 2, "ingest was not multi-batch"
 
 
-def test_null_safe_add_merge_handles_null_keys(spark):
-    """r15 review: the governance twins' state merge must treat NULL
-    keys as ONE group (matching groupBy semantics) — plain full-outer
-    equality would append a fresh state row per batch for a NULL-keyed
-    group, inflating B37's distinct-l."""
-    from frolyk_spark.streaming.jobs import _null_safe_add_merge
+def test_qi_pairs_stream_state_merges_null_keys(spark, workdir, monkeypatch):
+    """B37's distinct-l counts state rows, so a NULL-keyed QI group must
+    stay ONE state row across batches: qi_pairs as a complete-mode
+    streaming aggregation over a 2-file stream, with NULL event_type rows
+    in both files, holds one row per NULL group with the summed count."""
+    import datetime as dt
 
-    prior = spark.createDataFrame(
-        [(None, 1, 5), ("a", None, 2), ("a", 1, 1)],
-        "et string, vb int, c bigint",
-    )
-    batch = spark.createDataFrame(
-        [(None, 1, 3), ("a", None, 4), ("b", 2, 7)],
-        "et string, vb int, c bigint",
-    )
-    got = {
-        (r.et, r.vb): r.c
-        for r in _null_safe_add_merge(prior, batch, ["et", "vb"], "c").collect()
-    }
-    assert got == {(None, 1): 8, ("a", None): 6, ("a", 1): 1, ("b", 2): 7}
+    from frolyk_spark.operators.governance import qi_pairs
+    from frolyk_spark.streaming.jobs import _drop_stream, run_available_now
+
+    schema = "event_type string, ts timestamp, value double"
+    day1, day2 = dt.datetime(2024, 1, 1, 3), dt.datetime(2024, 1, 2, 3)
+    src = os.path.join(workdir, "in")
+    # every value falls in value bucket 0
+    _write_batch(spark, src, [
+        (None, day1, 1.0), (None, day1, 2.0), ("click", day1, 1.0),
+    ], schema)
+    _write_batch(spark, src, [
+        (None, day1, 3.0), (None, day2, 1.0), ("click", day1, 1.0),
+    ], schema)
+    seen = _record_batches(monkeypatch)
+    state = run_available_now(
+        qi_pairs(_drop_stream(spark.createDataFrame([], schema), src)),
+        mode="complete", prefix="qinull",
+    ).collect()
+    assert len({b for b, _ in seen}) >= 2, "the stream was not multi-batch"
+    got = {(r.event_type, r.d.day, r.vb): r.c for r in state}
+    assert len(state) == len(got)
+    assert got == {(None, 1, 0): 3, (None, 2, 0): 1, ("click", 1, 0): 2}
 
 
 def test_sweep_dead_edge_stores_reclaims_warehouse_dirs(spark):
@@ -2099,25 +2166,27 @@ def test_sweep_dead_edge_stores_reclaims_warehouse_dirs(spark):
 
 # --- every versioned-state operator under redelivery -------------------------
 
-def _run_batches_callers():
-    import inspect
+#: every stateful stream operator that runs through run_batches: directly,
+#: or through run_available_now's sink (the counts-add twins)
+RUN_BATCHES_CALLERS = [
+    "stream_asof_join", "stream_cdc_apply", "stream_cdc_versioned",
+    "stream_components", "stream_corpus_filter", "stream_dedup_incremental",
+    "stream_edge_degrees", "stream_heavy_hitters", "stream_k_anonymity",
+    "stream_l_diversity", "stream_late_routing", "stream_length_histogram",
+    "stream_media_dedup", "stream_quantile_sketch", "stream_sample_weighted",
+    "stream_token_feed", "stream_vocab_growth",
+]
 
-    from frolyk_spark.streaming.jobs import QUERIES
 
-    return sorted(
-        k for k, f in QUERIES.items() if "run_batches(" in inspect.getsource(f)
-    )
-
-
-@pytest.mark.parametrize("name", _run_batches_callers())
+@pytest.mark.parametrize("name", RUN_BATCHES_CALLERS)
 def test_stateful_stream_equals_oracle_under_redelivery(
     name, spark, duck, sf_dir, monkeypatch
 ):
-    """Every operator that runs its own foreachBatch body (a direct
-    run_batches caller) must end oracle-equal when each batch is applied
-    TWICE under the same batch id — what Spark does to the last
-    uncommitted batch after a crash between the body and the offset
-    commit. A failure here is a real redelivery bug in the operator."""
+    """Every stateful stream operator must end oracle-equal when each
+    batch is applied TWICE under the same batch id — what Spark does to
+    the last uncommitted batch after a crash between the body and the
+    offset commit. A failure here is a real redelivery bug in the
+    operator."""
     from frolyk_spark.streaming import jobs
     from tests.compare import compare_results
 
@@ -2170,7 +2239,7 @@ def test_direct_run_batches_caller_sweeps_dead_checkpoints(spark, sf_dir):
     import sys
 
     from frolyk_spark.sources import streams
-    from frolyk_spark.streaming.jobs import _pid_alive, stream_k_anonymity
+    from frolyk_spark.streaming.jobs import _pid_alive, stream_sample_weighted
 
     dead = subprocess.run(
         [sys.executable, "-c", "import os; print(os.getpid())"],
@@ -2178,6 +2247,6 @@ def test_direct_run_batches_caller_sweeps_dead_checkpoints(spark, sf_dir):
     ).stdout.strip()
     assert not _pid_alive(int(dead))
     leaked = os.path.join(streams.SCRATCH, "checkpoints", f"pid{dead}")
-    os.makedirs(os.path.join(leaked, "kanonmon_dead", "offsets"))
-    stream_k_anonymity(spark, sf_dir).collect()
+    os.makedirs(os.path.join(leaked, "wsample_dead", "offsets"))
+    stream_sample_weighted(spark, sf_dir).collect()
     assert not os.path.exists(leaked)
