@@ -972,8 +972,13 @@ def vocab_curve(spark: SparkSession, slices: DataFrame, new_words: DataFrame) ->
     """D82's curve from per-slice (bucket, n_docs_b, toks) sums and
     per-slice (bucket, new_words) counts, over the {VG_BUCKETS}-row
     spine. Shared with the B32 streaming twin, which feeds its
-    aggregation state."""
-    spine = spark.range(VG_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
+    aggregation state. No slices (an empty corpus has no id span to
+    slice) means no curve: zero rows, not {VG_BUCKETS} rows of zeros."""
+    spine = (
+        spark.range(VG_BUCKETS)
+        .select(F.col("id").cast("bigint").alias("bucket"))
+        .crossJoin(slices.select().limit(1))
+    )
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     return (
         spine.join(slices, "bucket", "left")
@@ -1014,7 +1019,7 @@ fb AS (
          CAST(count(*) AS BIGINT) AS new_words
   FROM fw CROSS JOIN b
   GROUP BY 1),
-sp AS (SELECT unnest(range({VG_BUCKETS})) AS bucket)
+sp AS (SELECT unnest(range({VG_BUCKETS})) AS bucket FROM b WHERE b.mn IS NOT NULL)
 SELECT CAST(sp.bucket AS BIGINT) AS bucket,
        CAST(coalesce(agg.n_docs_b, 0) AS BIGINT) AS n_docs_b,
        CAST(coalesce(fb.new_words, 0) AS BIGINT) AS new_words,

@@ -7,13 +7,18 @@ as an iterator of Arrow batches — a partition group is never materialized
 as one pandas DataFrame, so group size is bounded by batch size, not
 executor memory. Per-partition ordering — frolyk's core guarantee
 (reference src/streams.ts: one ordered stream per topic-partition) — holds
-because rows are hash-repartitioned on the partition column and sorted
-within each Spark partition on (partition, offset): every group's rows are
-contiguous and offset-ordered inside the iterator.
+because each log partition is placed whole on one Spark task and rows are
+sorted within each Spark partition on (partition, offset): every group's
+rows are contiguous and offset-ordered inside the iterator.
 
 ``num_partitions`` is the parallelism knob at 100 TB: it sizes the single
-shuffle. High-water offsets are a tiny per-partition aggregate joined in as
-a broadcast, so ``caught_up``/``watermarks`` work without a global pass.
+shuffle. Like a consumer group assigning partitions to members, the bridge
+places each log partition whole on one task — by counted size, not by hash
+of the partition value: per call, one stats row per log partition (row
+count, max offset) is collected, LPT puts the largest partition first onto
+the least-loaded task, and a small broadcast lookup tags each row with a
+key whose Spark hash lands on its task, plus the high-water offset that
+``caught_up``/``watermarks`` read.
 
 Two emit modes mirror the reference's two outputs:
 - ``emit="results"``: the chain's per-message return values
@@ -25,12 +30,14 @@ Two emit modes mirror the reference's two outputs:
 
 from __future__ import annotations
 
+import heapq
 from typing import Any, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from frolyk_spark.tasks.pipeline import build_processors, is_abandoned, process_message
 
@@ -143,6 +150,42 @@ def _headers_out(headers) -> list[dict] | None:
     return [{"key": str(h["key"]), "value": _to_bytes(h["value"])} for h in headers]
 
 
+def _spark_hash_int(value: int) -> int:
+    """Spark's ``hash()`` of an int column (Murmur3_x86_32.hashInt, seed
+    42), the hash ``repartition(n, col)`` takes ``pmod(·, n)`` of."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl(value * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m ^ 4
+    h = (h ^ h >> 16) * 0x85EBCA6B & m
+    h = (h ^ h >> 13) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _place(counts: dict, n_parts: int) -> dict:
+    """Place log partitions (partition -> row count) on ``n_parts`` Spark
+    tasks by LPT (Graham 1969): largest first, ties by partition id, each
+    onto the least-loaded task, so every partition stays whole on one task.
+    A task is named by the first int key whose Spark hash lands on it;
+    returns partition -> that key, for ``repartition(n_parts, key)``."""
+    tasks: dict[int, int] = {}
+    k = 0
+    while len(tasks) < min(n_parts, len(counts)):
+        tasks.setdefault(_spark_hash_int(k) % n_parts, k)
+        k += 1
+    loads = [(0, key) for key in tasks.values()]  # ascending: already a heap
+    placed = {}
+    for p, n in sorted(counts.items(), key=lambda pn: (-pn[1], pn[0])):
+        load, key = heapq.heappop(loads)
+        placed[p] = key
+        heapq.heappush(loads, (load + n, key))
+    return placed
+
+
 def run_task_batch(
     task,
     spark: SparkSession,
@@ -181,6 +224,9 @@ def run_task_batch(
     simple comparisons (NOT a map lookup, which parquet can't push), so a
     replay-from-offset batch prunes at the scan instead of reading the
     full table and filtering after.
+
+    The call itself runs one small action, the per-partition stats
+    aggregate that places partitions on tasks; the returned frame is lazy.
     """
     if emit not in ("results", "produced"):
         raise ValueError(f"emit must be 'results' or 'produced', got {emit!r}")
@@ -216,20 +262,32 @@ def run_task_batch(
         )
 
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    highs = df.groupBy(partition_col).agg(F.max(F.col(offset_col)).alias("__high"))
-    # LEFT join, deliberately: an inner join would silently DROP rows whose
-    # partition key is null (null keys never match), making the loud
-    # null-partition guard in run_partition unreachable — with the left
-    # join such rows arrive with __high null and fail there as documented.
-    # The highs aggregate re-evaluates df's subtree (one extra pruned pass)
-    # rather than localCheckpoint-ing it: df may be a full-table batch, and
-    # materializing it to cut lineage is the wrong trade at 100 TB. Callers
-    # feeding an EXPENSIVE computed frame should cut_lineage it first
-    # (functions.lineage) — the helper can't know which kind it got.
+    # one stats row per log partition (bounded by Kafka semantics): counts
+    # place partitions, maxima give high waters. It re-reads df's pruned
+    # subtree; callers feeding an EXPENSIVE computed frame cut_lineage it
+    # first — materializing a 100 TB batch to save this pass is the wrong trade
+    stats = {
+        r[0]: r for r in df.groupBy(partition_col).agg(
+            F.max(offset_col).alias("high"), F.count(F.lit(1)).alias("n")
+        ).collect() if r[0] is not None
+    }
+    keys = _place({p: r.n for p, r in stats.items()}, n_parts)
+    # an Arrow table becomes a LocalRelation, so its broadcast never starts
+    # a Python worker (a list of tuples would ride a pickled Python RDD)
+    lookup = spark.createDataFrame(
+        pa.table({partition_col: list(keys), "__slot": list(keys.values()),
+                  "__high": [stats[p].high + 1 for p in keys]}),
+        StructType([df.schema[partition_col],
+                    *_parse_datatype_string("__slot int, __high bigint").fields]),
+    )
+    # LEFT join, deliberately: null partitions have no lookup row, so they
+    # arrive with __high null and reach run_partition's loud guard instead
+    # of being silently dropped by an inner join
     prepared = (
-        df.join(F.broadcast(highs), partition_col, "left")
-        .repartition(n_parts, partition_col)
+        df.join(F.broadcast(lookup), partition_col, "left")
+        .repartition(n_parts, "__slot")
         .sortWithinPartitions(partition_col, offset_col)
+        .drop("__slot")
     )
 
     def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -246,7 +304,7 @@ def run_task_batch(
                         "partitions must be non-null ints (Kafka semantics)"
                     )
                 if part_val not in ctxs:
-                    high = int(sub["__high"].iloc[0]) + 1
+                    high = int(sub["__high"].iloc[0])
                     ctx = BatchAssignmentContext(topic, int(part_val), group, high)
                     ctxs[part_val] = (ctx, build_processors(ctx, processors))
                 ctx, fns = ctxs[part_val]
@@ -273,11 +331,11 @@ def run_task_batch(
                         results.append(result)
             if results:
                 yield pd.DataFrame(results, columns=out_cols)
-            if emit == "produced":
-                # drain per input batch so sends never accumulate for the
-                # whole partition in worker memory
-                rows = []
-                for ctx, _ in ctxs.values():
+            # drain sends per input batch (results mode discards them), so
+            # they never accumulate for the whole partition in worker memory
+            rows = []
+            for ctx, _ in ctxs.values():
+                if emit == "produced":
                     rows.extend(
                         {
                             "topic": m.get("topic", topic),
@@ -288,15 +346,9 @@ def run_task_batch(
                         }
                         for m in ctx.produced
                     )
-                    ctx.produced.clear()
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
-            else:
-                # results mode discards sends — drain per batch anyway so a
-                # chain that both returns results and calls send() cannot
-                # grow ctx.produced with rows-per-group
-                for ctx, _ in ctxs.values():
-                    ctx.produced.clear()
+                ctx.produced.clear()
+            if rows:
+                yield pd.DataFrame(rows, columns=out_cols)
 
     return prepared.mapInPandas(run_partition, schema)
 

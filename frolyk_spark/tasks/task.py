@@ -7,7 +7,7 @@ reference. Three execution paths:
   (reference task.ts:86-105).
 - ``run_batch(spark, df, ...)`` — the Spark-native scale path: the same
   processor chain executed distributed over a DataFrame's partitions via
-  ``applyInPandas`` (see frolyk_spark.tasks.bridge).
+  ``mapInPandas`` (see frolyk_spark.tasks.bridge).
 - ``start(spark)`` — Structured Streaming execution against Kafka
   (reference task.ts:107-155); requires a broker, gated in this image
   (see frolyk_spark.tasks.kafka).

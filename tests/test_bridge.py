@@ -42,11 +42,14 @@ def test_per_partition_order_preserved(spark, sf_dir):
 
 def test_plan_one_exchange_on_partition_col(spark, sf_dir):
     """The plan shape behind the BASELINE r10 scaling curve: the bridge
-    adds exactly ONE hash exchange, keyed on the caller's partition
-    column (per-partition order then costs only a within-partition sort),
-    and the highs side reaches it as a BroadcastExchange — any second
-    shuffle or a shuffled highs join would break the 'chain cost scales
-    with partitions' claim at 100 TB."""
+    adds exactly ONE data-path exchange (per-partition order then costs
+    only a within-partition sort). It is keyed on the slot key that places
+    each log partition whole on one task, and the per-partition lookup
+    reaches it as a BroadcastExchange — any second shuffle or a shuffled
+    lookup join would break the 'chain cost scales with partitions' claim
+    at 100 TB."""
+    import re
+
     task = Task(group="plan-check")
     src = task.source("events")
 
@@ -61,16 +64,117 @@ def test_plan_one_exchange_on_partition_col(spark, sf_dir):
         num_partitions=8,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # the ONE data-path shuffle: the explicit repartition on the caller's
-    # partition column (REPARTITION_BY_NUM); the only other exchange
-    # allowed is the metadata-tiny two-phase max inside the broadcast
-    # highs side (ENSURE_REQUIREMENTS on n_parts rows, pre-broadcast)
+    # the ONE data-path shuffle: the explicit repartition (REPARTITION_BY_NUM)
+    # on the slot key, sized by num_partitions; the stats aggregate that
+    # places partitions ran at call time, so no other exchange remains
     assert plan.count("REPARTITION_BY_NUM") == 1, plan
-    assert "Exchange hashpartitioning(part" in plan, plan
-    # the highs join must be broadcast, never a shuffled SortMergeJoin of
-    # the full batch against an n_parts-row aggregate
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)", plan) == [
+        ("__slot", "8")
+    ], plan
+    # the lookup join must be broadcast, never a shuffled SortMergeJoin of
+    # the full batch against a one-row-per-log-partition relation
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def _zipf_log(spark, n_parts=32, n_msgs=20_000):
+    """A log of ``n_msgs`` messages over ``n_parts`` partitions with Zipf
+    (s=1) sizes: partition k holds a share proportional to 1/(k+1), so the
+    largest of 32 holds about a quarter of the messages."""
+    import pandas as pd
+
+    weights = [1.0 / (k + 1) for k in range(n_parts)]
+    sizes = [max(1, round(n_msgs * w / sum(weights))) for w in weights]
+    pdf = pd.DataFrame({
+        "part": [p for p, n in enumerate(sizes) for _ in range(n)],
+        "off": [o for n in sizes for o in range(n)],
+    }).astype({"part": "int32", "off": "int64"})
+    # shuffled rows: order must come from the bridge, not from the input
+    return spark.createDataFrame(pdf.sample(frac=1.0, random_state=7), "part int, off bigint")
+
+
+def _echo_task(group):
+    task = Task(group=group)
+    task.processor(task.source("log"), lambda a: (
+        lambda message, context: {"part": message["partition"], "offset": message["offset"]}
+    ))
+    return task
+
+
+def test_skewed_log_partitions_placed_by_size(spark):
+    """Log partitions are placed on Spark tasks by counted size (LPT), not
+    by hash of the partition value: on a 32-partition Zipf log over 4
+    tasks, hash placement puts ~55% of the messages on one task; LPT keeps
+    the largest task near the largest partition's ~25% share, while every
+    log partition stays whole on one task, offset-ordered."""
+    df = _zipf_log(spark)
+    out = run_task_batch(
+        _echo_task("balance-check"), spark, df, topic="log", partition_col="part",
+        offset_col="off", output_schema="part int, offset bigint", num_partitions=4,
+    )
+    rows = out.withColumn("task", F.spark_partition_id()).collect()
+    assert len(rows) == df.count()
+    per_task: dict[int, int] = {}
+    tasks_of: dict[int, set] = {}
+    last: dict[int, int] = {}
+    for r in rows:
+        per_task[r.task] = per_task.get(r.task, 0) + 1
+        tasks_of.setdefault(r.part, set()).add(r.task)
+        assert r.offset > last.get(r.part, -1), f"out-of-order offset in part {r.part}"
+        last[r.part] = r.offset
+    assert max(per_task.values()) / len(rows) <= 0.30, per_task
+    assert set(tasks_of) == set(range(32))
+    assert all(len(t) == 1 for t in tasks_of.values()), tasks_of
+
+
+def test_spark_hash_int_matches_spark_hash(spark):
+    """The slot keys rely on a Python twin of Spark's int hash (the one
+    ``repartition(n, col)`` takes pmod of) — negatives and the int32
+    extremes included."""
+    from pyspark.sql.types import IntegerType
+
+    from frolyk_spark.tasks.bridge import _spark_hash_int
+
+    values = list(range(-2_000, 2_000)) + [-(2**31), 2**31 - 1]
+    df = spark.createDataFrame(values, IntegerType()).select(
+        "value", F.hash("value").alias("h")
+    )
+    assert {r.value: r.h for r in df.collect()} == {v: _spark_hash_int(v) for v in values}
+
+
+def test_empty_batch_keeps_declared_schema(spark):
+    """A zero-row batch (the stats collect returns no rows, so the lookup
+    is empty) yields an empty result with the declared schema in both
+    emit modes."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from frolyk_spark.tasks.bridge import PRODUCED_SCHEMA
+
+    df = _zipf_log(spark).limit(0)
+    for emit, schema in (("results", "part int, offset bigint"), ("produced", PRODUCED_SCHEMA)):
+        out = run_task_batch(
+            _echo_task("empty-check"), spark, df, topic="log", partition_col="part",
+            offset_col="off", output_schema=schema, emit=emit,
+        )
+        assert out.schema.simpleString() == _parse_datatype_string(schema).simpleString()
+        assert out.collect() == []
+
+
+def test_fewer_log_partitions_than_tasks(spark):
+    """Three log partitions over eight Spark tasks: every message runs,
+    each partition on one task, and num_partitions still sizes the
+    shuffle."""
+    df = _zipf_log(spark, n_parts=3, n_msgs=300)
+    out = run_task_batch(
+        _echo_task("few-parts"), spark, df, topic="log", partition_col="part",
+        offset_col="off", output_schema="part int, offset bigint", num_partitions=8,
+    )
+    assert out.rdd.getNumPartitions() == 8
+    rows = out.withColumn("task", F.spark_partition_id()).collect()
+    assert sorted((r.part, r.offset) for r in rows) == sorted(
+        (r.part, r.off) for r in df.collect()
+    )
+    assert len({(r.part, r.task) for r in rows}) == 3
 
 
 def test_num_partitions_honored(spark, sf_dir):

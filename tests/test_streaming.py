@@ -2076,6 +2076,26 @@ def test_counts_add_twin_over_empty_table(name, spark, sf_dir, tmp_path):
     assert got.collect() == []
 
 
+def test_vocab_growth_batch_and_oracle_over_empty_table(spark, sf_dir, tmp_path):
+    """D82's batch twin and its DuckDB oracle agree with the B32 stream
+    twin on an empty corpus: zero rows, not a curve of zeros."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from frolyk_spark.operators.vocab import VOCAB_GROWTH_SQL, vocab_growth
+
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(src.slice(0, 0), path)
+    got = vocab_growth(spark, str(tmp_path))
+    assert got.columns == ["bucket", "n_docs_b", "new_words", "cum_tokens", "cum_vocab"]
+    assert got.collect() == []
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    assert con.sql(VOCAB_GROWTH_SQL).fetchall() == []
+    con.close()
+
+
 def test_stream_l_diversity_matches_batch_audit(spark, sf_dir, monkeypatch):
     """B37 (r15): the streaming monitor's final l-band histogram must
     equal the batch audit exactly — the state is the batch audit's own
