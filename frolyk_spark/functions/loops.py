@@ -78,6 +78,25 @@ def loop_partitions(spark: SparkSession, big_bytes: int = 0) -> int:
 
 
 @contextmanager
+def conf_span(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the span and restore exactly what was
+    there before on exit, error or not: a key's previous value, or an
+    unset for a key that was not set (a session default stays a default
+    instead of being pinned to its current value)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
 def fixed_plan_loop(spark: SparkSession, *, big_bytes: int = 0) -> Iterator[int]:
     """Context for an iterative fixed-point loop: AQE and auto-broadcast
     off, shuffle partitions pinned to ``loop_partitions(...)`` so
@@ -88,19 +107,13 @@ def fixed_plan_loop(spark: SparkSession, *, big_bytes: int = 0) -> Iterator[int]
     INSIDE the context (eager cuts / fixpoint counts), while the frame a
     caller returns may be consumed under normal session conf afterwards
     (its loop-side inputs are already materialized checkpoints)."""
-    confs = {
+    parts = loop_partitions(spark, big_bytes)
+    with conf_span(spark, {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.shuffle.partitions": str(loop_partitions(spark, big_bytes)),
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield int(confs["spark.sql.shuffle.partitions"])
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+        "spark.sql.shuffle.partitions": str(parts),
+    }):
+        yield parts
 
 
 def dir_bytes(path: str) -> int:

@@ -15,6 +15,7 @@ LLM-data-pipeline surface of the charter (SURVEY §2 D).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -432,11 +433,16 @@ def packed_offsets(
             r["bucket"]: r["tot"]
             for r in toks.groupBy("bucket").agg(F.sum("n_tokens").alias("tot")).collect()
         }
-    prefix, acc = [], int(base_offset)
+    starts, acc = [], int(base_offset)
     for b in range(PACK_BUCKETS):
-        prefix.append((b, acc))
+        starts.append(acc)
         acc += totals.get(b, 0)
-    prefix_df = spark.createDataFrame(prefix, "bucket int, bucket_start long")
+    # an Arrow table becomes a LocalRelation, so its broadcast never starts
+    # a Python worker (a list of tuples would ride a pickled Python RDD)
+    prefix_df = spark.createDataFrame(
+        pa.table({"bucket": list(range(PACK_BUCKETS)), "bucket_start": starts}),
+        "bucket int, bucket_start long",
+    )
     w = (
         Window.partitionBy("bucket")
         .orderBy("ord_key", "doc_id")

@@ -24,6 +24,7 @@ import hashlib
 import os
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -205,12 +206,14 @@ def _lsh_from(
 
     x = np.stack([np.asarray(r.probe_emb, dtype=np.float64) for r in probe_rows])
     codes = _lsh_codes(x, _hyperplanes())
+    # Arrow-built, like every small driver frame here: a LocalRelation,
+    # not a pickled Python RDD (see pipeline.packed_offsets)
     pb = spark.createDataFrame(
-        [
-            (int(r.probe_id), t, int(codes[i, t]))
-            for i, r in enumerate(probe_rows)
-            for t in range(LSH_TABLES)
-        ],
+        pa.table({
+            "probe_id": np.repeat([int(r.probe_id) for r in probe_rows], LSH_TABLES),
+            "table_id": np.tile(np.arange(LSH_TABLES), len(probe_rows)),
+            "bucket": codes.ravel(),
+        }),
         "probe_id bigint, table_id int, bucket bigint",
     )
     cb = _bucketize(corpus, "cand_emb")
@@ -482,11 +485,12 @@ def _ivf_from(
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     nearest_cells = np.argsort(-(x @ cent_unit.T), axis=1)[:, :IVF_NPROBE]
     pb = spark.createDataFrame(
-        [
-            (int(r.probe_id), int(c))
-            for i, r in enumerate(probe_rows)
-            for c in nearest_cells[i]
-        ],
+        pa.table({
+            "probe_id": np.repeat(
+                [int(r.probe_id) for r in probe_rows], nearest_cells.shape[1]
+            ),
+            "cluster": nearest_cells.ravel(),
+        }),
         "probe_id bigint, cluster int",
     )
     cands = (

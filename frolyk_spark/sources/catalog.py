@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from frolyk_spark.functions.loops import conf_span
+
 TABLES = (
     "region",
     "nation",
@@ -137,12 +139,8 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     day replaces that day, which is the retry story for batch jobs.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_span(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return spark.read.parquet(path)
 
 
@@ -1117,13 +1115,9 @@ def purge_deletes(
     # resurrecting deleted rows AND duplicating survivors. With
     # inference off the partition column round-trips as the exact dir
     # string, so the committer rewrites in place.
-    prev_infer = spark.conf.get(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "true"
-    )
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
-    try:
+    with conf_span(spark, {
+        "spark.sql.sources.partitionColumnTypeInference.enabled": "false"
+    }):
         tomb_dirs = tomb.select(
             F.expr("regexp_replace(_file, '/[^/]*$', '')").alias("_dir")
         ).distinct()
@@ -1159,11 +1153,6 @@ def purge_deletes(
         }
         if survivor_dirs:
             overwrite_partitions(to_rewrite, path, partition_cols)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionColumnTypeInference.enabled",
-            prev_infer,
-        )
     for d in part_dirs:
         if d not in survivor_dirs:
             shutil.rmtree(d, ignore_errors=True)

@@ -33,12 +33,15 @@ as a symlink under .scratch/streams (no data copy).
 Every foreachBatch operator runs through ONE lifecycle, ``run_batches``
 (the shuffle-partition pin, the checkpoint, the availableNow start/await,
 checkpoint cleanup, named-run resume), and keeps its cross-batch state in
-ONE store, ``VersionedState`` (version naming, the strictly-below
-``prior(batch_id)`` redelivery rule, parquet and atomically-renamed
-one-scalar versions, keep >= 2 retention). An operator supplies only its
-per-batch body and its final read — the frolyk Task shape, where the
-framework owns assignment, commits and restart and the caller supplies
-the processor.
+ONE store, ``VersionedState``, the only code that knows the state's
+on-disk layout: version naming, the strictly-below ``prior(batch_id)``
+redelivery rule, named side frames fused into one partitioned write,
+atomically-renamed one-scalar versions, keep >= 2 retention, and every
+read (a version, the prior or latest one, one side across versions),
+which yields the caller's named schema when there is nothing to read.
+An operator supplies only its per-batch body and its final read — the
+frolyk Task shape, where the framework owns assignment, commits and
+restart and the caller supplies the processor.
 
 Cross-batch state that merges by count, sum, min or max is not hand-rolled
 at all: the operator applies its batch twin's first-level aggregate to
@@ -58,8 +61,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from frolyk_spark.operators.dedup import _dedup_incremental_sql
+from frolyk_spark.functions.loops import conf_span
 from frolyk_spark.operators.graph import ORACLES as _graph_oracles
 from frolyk_spark.sources.catalog import load_table
 from frolyk_spark.sources import streams
@@ -326,30 +331,44 @@ def _check_keep(keep: int | None) -> None:
 
 class VersionedState:
     """Per-batch versioned state under ``root`` — THE cross-batch store of
-    every foreachBatch operator. Version ``v`` is ``root/{prefix}{v}``: a
-    parquet dir (``write``; ``side=`` partitions when written by side) or
-    a one-scalar text file ``{prefix}{v}.txt`` (``write_scalar``,
+    every foreachBatch operator, and the only code that knows its on-disk
+    layout. Version ``v`` is ``root/{prefix}{v}``: a parquet dir
+    (``write``), with one ``side=<name>`` partition per named side frame,
+    or a one-scalar text file ``{prefix}{v}.txt`` (``write_scalar``,
     atomically renamed — a scalar doesn't earn a parquet job per batch).
 
     foreachBatch is at-least-once: after a crash between the body and the
     offset commit Spark re-runs the last batch under the same id. Every
     batch therefore writes its OWN version (a redelivery overwrites it)
-    and reads only versions STRICTLY below its id (``prior``/``versions
-    (below=...)``) — never its own or a successor's output, so retries
-    never double-count. ``keep`` bounds the lineage to the newest ``keep``
-    versions after each write (>= 2 keeps the redelivery anchor)."""
+    and reads only versions STRICTLY below its id (``prior`` /
+    ``read_prior`` / ``read_side(below=...)``) — never its own or a
+    successor's output, so retries never double-count. ``keep`` bounds
+    the lineage to the newest ``keep`` versions after each write (>= 2
+    keeps the redelivery anchor).
 
-    def __init__(self, root: str, *, prefix: str = "s", keep: int | None = None):
+    Reads name a DDL ``schema``: the frame is projected onto its columns,
+    and when there is nothing to read it is the empty frame of that
+    schema. Without a schema a read with nothing to read returns None,
+    for a body whose plan branches on whether prior state exists."""
+
+    def __init__(
+        self, spark: SparkSession, root: str, *, prefix: str = "s",
+        keep: int | None = None,
+    ):
         _check_keep(keep)
-        self.root, self.prefix, self.keep = root, prefix, keep
+        self.spark, self.root, self.prefix, self.keep = spark, root, prefix, keep
 
-    def path(self, v: int, side: str | None = None) -> str:
+    def _path(self, v: int, side: str | None = None) -> str:
         p = os.path.join(self.root, f"{self.prefix}{v}")
         return p if side is None else os.path.join(p, f"side={side}")
 
-    def versions(self, *, below: int | None = None, side: str | None = None) -> list[int]:
+    def versions(
+        self, *, below: int | None = None, side: str | None = None,
+        sealed: bool = False,
+    ) -> list[int]:
         """Committed version ids, ascending; ``side`` keeps only versions
-        that carry that partition."""
+        that carry that partition, ``sealed`` only parquet versions whose
+        write committed (``_SUCCESS`` present)."""
         n = len(self.prefix)
         found = set()
         for f in os.listdir(self.root) if os.path.isdir(self.root) else []:
@@ -357,7 +376,10 @@ class VersionedState:
             if stem.startswith(self.prefix) and stem[n:].isdigit():
                 v = int(stem[n:])
                 if (below is None or v < below) and (
-                    side is None or os.path.isdir(self.path(v, side))
+                    side is None or os.path.isdir(self._path(v, side))
+                ) and (
+                    not sealed
+                    or os.path.exists(os.path.join(self._path(v), "_SUCCESS"))
                 ):
                     found.add(v)
         return sorted(found)
@@ -372,32 +394,100 @@ class VersionedState:
         vs = self.versions(side=side)
         return vs[-1] if vs else None
 
-    def paths(self, side: str, *, below: int | None = None) -> list[str]:
-        """The ``side=`` dirs of every (or every strictly-below) version."""
-        return [self.path(v, side) for v in self.versions(below=below, side=side)]
+    def read(
+        self, v: int | list[int] | None, schema: str | None = None, *,
+        side: str | None = None,
+    ) -> DataFrame | None:
+        """Version ``v`` — or the versions listed, in one scan — of
+        ``side`` (the whole version when None); see the class docstring
+        for ``schema``."""
+        vs = [] if v is None else [v] if isinstance(v, int) else v
+        if not vs:
+            return None if schema is None else self.spark.createDataFrame([], schema)
+        df = self.spark.read.parquet(*[self._path(x, side) for x in vs])
+        if schema is None:
+            return df
+        return df.select(*_parse_datatype_string(schema).fieldNames())
 
-    def write(self, batch_id: int, df: DataFrame, *, by_side: bool = False) -> None:
-        w = df.write.mode("overwrite")
-        if by_side:
-            w = w.partitionBy("side")
-        w.parquet(self.path(batch_id))
+    def read_prior(
+        self, batch_id: int, schema: str | None = None, *, side: str | None = None
+    ) -> DataFrame | None:
+        """The redelivery anchor's state: ``read(prior(batch_id, side))``."""
+        return self.read(self.prior(batch_id, side), schema, side=side)
+
+    def read_latest(
+        self, schema: str | None = None, *, side: str | None = None
+    ) -> DataFrame | None:
+        return self.read(self.latest(side), schema, side=side)
+
+    def read_side(
+        self, side: str, schema: str | None = None, *, below: int | None = None
+    ) -> DataFrame | None:
+        """The union of ``side`` over every (or every strictly-below)
+        version that carries it."""
+        return self.read(self.versions(below=below, side=side), schema, side=side)
+
+    def write(self, batch_id: int, df: DataFrame | None = None, **sides: DataFrame) -> None:
+        """Overwrite version ``batch_id`` with ``df``, or with the named
+        side frames in ONE write job: each frame is tagged with its
+        ``side`` name, the frames are unioned by column name (a column a
+        side lacks is written as a typed null) and partitioned by side —
+        one job per batch, where per-side filtered writes were one each."""
+        if sides:
+            fused = None
+            for name, frame in sides.items():
+                tagged = frame.select(F.lit(name).alias("side"), "*")
+                fused = tagged if fused is None else fused.unionByName(
+                    tagged, allowMissingColumns=True
+                )
+            fused.write.mode("overwrite").partitionBy("side").parquet(
+                self._path(batch_id)
+            )
+        else:
+            df.write.mode("overwrite").parquet(self._path(batch_id))
         if self.keep is not None:
             # retention AFTER the commit: the just-written version is the
             # newest, so its predecessor survives any keep >= 2
             for v in self.versions()[: -self.keep]:
-                shutil.rmtree(self.path(v), ignore_errors=True)
+                shutil.rmtree(self._path(v), ignore_errors=True)
 
     def write_scalar(self, batch_id: int, value: int) -> None:
         os.makedirs(self.root, exist_ok=True)
-        dst = self.path(batch_id) + ".txt"
+        dst = self._path(batch_id) + ".txt"
         tmp = f"{dst}.tmp-{os.getpid()}"
         with open(tmp, "w") as fh:
             fh.write(str(int(value)))
         os.replace(tmp, dst)
 
     def scalar(self, v: int) -> int:
-        with open(self.path(v) + ".txt") as fh:
+        with open(self._path(v) + ".txt") as fh:
             return int(fh.read())
+
+
+def _check_batch_keys(
+    batch_id: int, lo, hi, n: int, parts: int, contract: str, keys: str
+) -> None:
+    """THE per-batch guard of a content-defined drop (stage_keyed_file_drop):
+    every row of batch ``batch_id`` must carry batch key ``batch_id %
+    parts`` — ``lo``/``hi`` are the batch's min/max key over ``n`` rows —
+    or the oracle, which rebuilds batch membership from the keys, no longer
+    describes the run. A file-listing-order change dies here loudly."""
+    if n and not (lo == hi == batch_id % parts):
+        raise RuntimeError(
+            f"batch {batch_id} violated the {contract} contract: "
+            f"{keys} [{lo}..{hi}] (file listing order changed?)"
+        )
+
+
+def _check_batch(
+    batch: DataFrame, batch_id: int, key: str, parts: int, contract: str, keys: str
+) -> None:
+    """_check_batch_keys over ``batch``'s min/max of the ``key`` expression,
+    in one aggregate job (bodies that fuse the contract into an aggregate
+    they need anyway call _check_batch_keys directly)."""
+    k = F.expr(key)
+    lo, hi, n = batch.agg(F.min(k), F.max(k), F.count(F.lit(1))).collect()[0]
+    _check_batch_keys(batch_id, lo, hi, n, parts, contract, keys)
 
 
 def run_batches(
@@ -427,7 +517,6 @@ def run_batches(
     checkpoint and its ``.owner_pid`` liveness file both go, or one
     orphan owner file would accumulate per run. ``stop_on_idle`` /
     ``drain_state``: see run_available_now."""
-    spark = stream.sparkSession
     _sweep_results()
     # Checkpoints have no lazy readers (deleted below on every normal
     # exit), so a SIGKILLed run's checkpoint would otherwise leak forever
@@ -435,27 +524,25 @@ def run_batches(
     # for the layout contract).
     _sweep_checkpoints()
     ckpt = _checkpoint_dir(name, named=resume)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     ok = False
     try:
-        query = (
-            stream.writeStream.foreachBatch(apply)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if stop_on_idle is None:
-            query.awaitTermination()
-        else:
-            _stop_when_idle(
-                query, idle_batches=stop_on_idle,
-                require_empty_state=drain_state,
+        with conf_span(stream.sparkSession, {"spark.sql.shuffle.partitions": "4"}):
+            query = (
+                stream.writeStream.foreachBatch(apply)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
             )
+            if stop_on_idle is None:
+                query.awaitTermination()
+            else:
+                _stop_when_idle(
+                    query, idle_batches=stop_on_idle,
+                    require_empty_state=drain_state,
+                )
         ok = True
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ok or not resume:
             shutil.rmtree(ckpt, ignore_errors=True)
             if resume:
@@ -697,15 +784,15 @@ GROUP BY user_id, sid
 """
 
 
-# --- B10: stream-stream join -------------------------------------------------
+# --- B10/B18/B21: the click -> purchase stream-stream join -------------------
 
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream inner join: purchases within 30 minutes
-    after a click by the same user. Both sides carry watermarks and the
-    time-range condition bounds join state, so Spark can evict — the shape
-    that keeps state finite on unbounded streams. availableNow + append
-    emits the complete deterministic pair set, checked against a batch
-    range-join oracle."""
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases within 30 minutes after a click by the same user, as a
+    ``how`` join of two event streams: both sides carry 2-hour
+    watermarks and the time-range condition bounds join state, so Spark
+    can evict (and, for the outer joins, emit the null side once the
+    watermark proves no match can arrive). B10, B18 and B21 differ only
+    in ``how`` and their final select."""
     clicks = (
         events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -726,13 +813,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "2 hours")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select("user_id", "click_id", "purchase_id")
+        how,
+    )
+
+
+# --- B10: stream-stream join -------------------------------------------------
+
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream inner join: purchases within 30 minutes
+    after a click by the same user. Both sides carry watermarks and the
+    time-range condition bounds join state, so Spark can evict — the shape
+    that keeps state finite on unbounded streams. availableNow + append
+    emits the complete deterministic pair set, checked against a batch
+    range-join oracle."""
+    joined = _click_purchase_join(spark, sf_dir, "inner").select(
+        "user_id", "click_id", "purchase_id"
+    )
     return run_available_now(joined, mode="append", prefix="ssjoin")
 
 
@@ -772,33 +873,9 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin (StreamingJoinHelper.getStateValueWatermark). The DuckDB oracle
     reproduces that arithmetic in exact integer µs on the stored data.
     """
-    clicks = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
+    joined = _click_purchase_join(spark, sf_dir, "leftOuter").select(
+        "user_id", "click_id", "purchase_id"
     )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    ).select("user_id", "click_id", "purchase_id")
     return run_available_now(joined, mode="append", prefix="sojoin")
 
 
@@ -863,33 +940,7 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with wm_ms = min over sides of (floor(max_event_us/1000) - delay_ms).
     The DuckDB oracle reproduces this in exact integer µs on stored data.
     """
-    clicks = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "fullOuter",
-    ).select(
+    joined = _click_purchase_join(spark, sf_dir, "fullOuter").select(
         # right-only rows carry a NULL left key: surface ONE user_id
         F.coalesce("user_id", "p_user_id").alias("user_id"),
         "click_id",
@@ -1507,6 +1558,13 @@ def _cdc_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
+#: the materialized CDC state both B19 and B23 return
+CDC_STATE_SCHEMA = (
+    "user_id bigint, n_events bigint, last_ts_us bigint, last_type string, "
+    "last_value double"
+)
+
+
 def stream_cdc_apply(
     spark: SparkSession, sf_dir: str, *, keep_versions: int | None = None
 ) -> DataFrame:
@@ -1545,26 +1603,17 @@ def stream_cdc_apply(
     name, root = _run_root("cdc_")
     # keep_versions=None keeps the full history for the gate run's
     # multi-version assertions; production CDC state needs bounded lineage
-    state = VersionedState(root, keep=keep_versions)
+    state = VersionedState(spark, root, keep=keep_versions)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = _cdc_reduce(batch_df)
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            batch = _cdc_merge(spark.read.parquet(state.path(prior_v)), batch)
+        prior = state.read_prior(batch_id)
+        if prior is not None:
+            batch = _cdc_merge(prior, batch)
         state.write(batch_id, batch)
 
-    stream = _drop_stream(ev, stage)
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "user_id bigint, n_events bigint, last_ts_us bigint, "
-                "last_type string, last_value double",
-        )
-    return spark.read.parquet(state.path(v)).select(
-        "user_id", "n_events", "last_ts_us", "last_type", "last_value"
-    )
+    run_batches(_drop_stream(ev, stage), _apply, name=name)
+    return state.read_latest(CDC_STATE_SCHEMA)
 
 
 STREAM_CDC_APPLY_SQL = f"""
@@ -1616,19 +1665,17 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_codes = persisted_dhash_codes(spark, sf_dir).where(~is_new)
 
     name, root = _run_root("smd_")
-    out = VersionedState(os.path.join(root, "batches"), prefix="b")
+    out = VersionedState(spark, os.path.join(root, "batches"), prefix="b")
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         batch_codes = dhash_codes_frame(batch_df)
         batch_codes.persist()
         try:
             # prior batches' codes live under their side=codes partition
-            prior = out.paths("codes", below=batch_id)
+            prior = out.read_side("codes", below=batch_id)
             fresh = batch_codes
-            if prior:
-                fresh = fresh.unionByName(
-                    spark.read.parquet(*prior).select("doc_id", "dhash")
-                )
+            if prior is not None:
+                fresh = fresh.unionByName(prior.select("doc_id", "dhash"))
             pairs = media_probe_pairs(
                 batch_codes, corpus_codes.unionByName(fresh)
             )
@@ -1636,32 +1683,12 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # batch rule): pairs and the batch's codes land in one Spark
             # job under b{batch_id}/side={pairs,codes}; overwrite of the
             # whole batch dir keeps at-least-once redelivery idempotent
-            fused = pairs.select(
-                F.lit("pairs").alias("side"),
-                "doc_a", "doc_b", "hamming",
-                F.lit(None).cast("bigint").alias("doc_id"),
-                F.lit(None).cast("bigint").alias("dhash"),
-            ).unionByName(
-                batch_codes.select(
-                    F.lit("codes").alias("side"),
-                    F.lit(None).cast("bigint").alias("doc_a"),
-                    F.lit(None).cast("bigint").alias("doc_b"),
-                    F.lit(None).cast("bigint").alias("hamming"),
-                    "doc_id", "dhash",
-                )
-            )
-            out.write(batch_id, fused, by_side=True)
+            out.write(batch_id, pairs=pairs, codes=batch_codes)
         finally:
             batch_codes.unpersist()
 
-    stream = _drop_stream(docs, stage)
-    run_batches(stream, _probe, name=name)
-    dirs = out.paths("pairs")
-    if not dirs:
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, hamming bigint"
-        )
-    return spark.read.parquet(*dirs).select("doc_a", "doc_b", "hamming")
+    run_batches(_drop_stream(docs, stage), _probe, name=name)
+    return out.read_side("pairs", "doc_a bigint, doc_b bigint, hamming bigint")
 
 
 def _stream_media_dedup_sql() -> str:
@@ -1754,10 +1781,7 @@ def stream_cdc_versioned(
     try:
         final = read_versioned(spark, root)
     except FileNotFoundError:
-        return spark.createDataFrame(
-            [], "user_id bigint, n_events bigint, last_ts_us bigint, "
-                "last_type string, last_value double",
-        )
+        return spark.createDataFrame([], CDC_STATE_SCHEMA)
     return final.select(
         "user_id", "n_events", "last_ts_us", "last_type", "last_value"
     )
@@ -1828,7 +1852,7 @@ def stream_dedup_incremental(
     # the in-memory cache is the single-run equivalent.
     corpus_bands = band_hashes(corpus_sigs).persist()
     name, root = _run_root("sdi_", _name)
-    out = VersionedState(os.path.join(root, "batches"), prefix="b")
+    out = VersionedState(spark, os.path.join(root, "batches"), prefix="b")
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         # band the batch ONCE and accumulate BANDS, not signatures: the
@@ -1842,13 +1866,11 @@ def stream_dedup_incremental(
         batch_bands.persist()
         try:
             # prior batches' bands live under side=bands of their dir
-            prior = out.paths("bands", below=batch_id)
+            prior = out.read_side("bands", below=batch_id)
             all_bands = corpus_bands.unionByName(batch_bands)
-            if prior:
+            if prior is not None:
                 all_bands = all_bands.unionByName(
-                    spark.read.parquet(*prior).select(
-                        "doc_id", "band_id", "band_hash"
-                    )
+                    prior.select("doc_id", "band_id", "band_hash")
                 )
             # the pair semantics live in dedup.probe_pairs — ONE definition
             # shared with D28, which the B17≡D28 equivalence contract and
@@ -1860,23 +1882,7 @@ def stream_dedup_incremental(
             # under b{batch_id}/side={pairs,bands}; overwriting the whole
             # batch dir keeps at-least-once redelivery idempotent, and
             # the persisted batch_bands materializes once for both arms
-            band_types = dict(batch_bands.dtypes)
-            fused = pairs.select(
-                F.lit("pairs").alias("side"),
-                "doc_a", "doc_b",
-                *[
-                    F.lit(None).cast(band_types[c]).alias(c)
-                    for c in ("doc_id", "band_id", "band_hash")
-                ],
-            ).unionByName(
-                batch_bands.select(
-                    F.lit("bands").alias("side"),
-                    F.lit(None).cast("bigint").alias("doc_a"),
-                    F.lit(None).cast("bigint").alias("doc_b"),
-                    "doc_id", "band_id", "band_hash",
-                )
-            )
-            out.write(batch_id, fused, by_side=True)
+            out.write(batch_id, pairs=pairs, bands=batch_bands)
         finally:
             batch_bands.unpersist()
 
@@ -1885,12 +1891,7 @@ def stream_dedup_incremental(
         run_batches(stream, _probe, name=name, resume=_name is not None)
     finally:
         corpus_bands.unpersist()
-    parts = out.paths("pairs")
-    if not parts:
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint"
-        )
-    return spark.read.parquet(*parts).select("doc_a", "doc_b")
+    return out.read_side("pairs", "doc_a bigint, doc_b bigint")
 
 
 # --- B25: late-data routing (watermark side-output) ---------------------------
@@ -1945,7 +1946,7 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name, root = _run_root("latert_")
     # running max event time, one long per version
-    wm = VersionedState(os.path.join(root, "wm"))
+    wm = VersionedState(spark, os.path.join(root, "wm"))
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -1964,12 +1965,9 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min(F.expr(f"event_id % {LATE_PARTS}")),
                 F.max(F.expr(f"event_id % {LATE_PARTS}")),
             ).collect()[0]
-            if n and not (mod_min == mod_max == batch_id % LATE_PARTS):
-                raise RuntimeError(
-                    f"batch {batch_id} violated the content contract: "
-                    f"key mods [{mod_min}..{mod_max}] "
-                    "(file listing order changed?)"
-                )
+            _check_batch_keys(
+                batch_id, mod_min, mod_max, n, LATE_PARTS, "content", "key mods"
+            )
             prior_v = wm.prior(batch_id)
             prior_max = None if prior_v is None else wm.scalar(prior_v)
             wm_us = -1 if prior_max is None else prior_max - LATE_DELAY_US
@@ -2001,12 +1999,7 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch.unpersist()
 
-    from frolyk_spark.sources.streams import file_stream
-
-    stream = file_stream(
-        spark, stage, ev.schema, max_files_per_trigger=1
-    )
-    run_batches(stream, _route, name=name)
+    run_batches(_drop_stream(ev, stage), _route, name=name)
     rows_root = os.path.join(root, "rows")
     if not os.path.isdir(rows_root):
         return spark.createDataFrame(
@@ -2081,7 +2074,7 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = stage_multi_file_drop(docs, sf_dir, "documents", "wsample")
 
     name, root = _run_root("wsample_")
-    state = VersionedState(root)
+    state = VersionedState(spark, root)
 
     def _bottom_k(df: DataFrame) -> DataFrame:
         return df.orderBy("priority", "doc_id").limit(WEIGHTED_K)
@@ -2099,20 +2092,13 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"({prio}) div cast(n_chars as bigint)").alias("priority"),
             )
         )
-        prior_v = state.prior(batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(state.path(prior_v))
+        prior = state.read_prior(batch_id)
+        if prior is not None:
             batch = _bottom_k(prior.unionByName(batch))
         state.write(batch_id, batch.coalesce(1))
 
-    stream = _drop_stream(docs, stage)
-    run_batches(stream, _apply, name=name)
-    v = state.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [], "doc_id bigint, weight bigint, priority bigint"
-        )
-    return spark.read.parquet(state.path(v))
+    run_batches(_drop_stream(docs, stage), _apply, name=name)
+    return state.read_latest("doc_id bigint, weight bigint, priority bigint")
 
 
 # --- B28: streaming corpus-filter ingest gate -----------------------------------
@@ -2147,7 +2133,7 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frolyk_spark.operators.text import (
         KEEP_LANGS, MIN_QUALITY, lang_id_frame, text_stats_frame,
     )
-    from frolyk_spark.sources.streams import file_stream, stage_keyed_file_drop
+    from frolyk_spark.sources.streams import stage_keyed_file_drop
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # staging scaffolding only: the range key is derived from the OBSERVED
@@ -2163,7 +2149,7 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name, root = _run_root("cfilter_")
-    rows = VersionedState(os.path.join(root, "rows"), prefix="b")
+    rows = VersionedState(spark, os.path.join(root, "rows"), prefix="b")
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -2171,26 +2157,16 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         batch.persist()
         try:
-            lo, hi, n = batch.agg(
-                F.min(F.expr(range_key)),
-                F.max(F.expr(range_key)),
-                F.count(F.lit(1)),
-            ).collect()[0]
-            if n and not (lo == hi == batch_id % CFILTER_PARTS):
-                raise RuntimeError(
-                    f"batch {batch_id} violated the range contract: "
-                    f"quartiles [{lo}..{hi}]"
-                )
+            _check_batch(batch, batch_id, range_key, CFILTER_PARTS, "range", "quartiles")
             w = Window.partitionBy("th").orderBy("doc_id")
             firsts = (
                 batch.withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") == 1)
                 .drop("rn")
             )
-            seen_dirs = rows.paths("seen", below=batch_id)
-            if seen_dirs:
-                seen = spark.read.parquet(*seen_dirs).select("th")
-                firsts = firsts.join(seen, "th", "left_anti")
+            seen = rows.read_side("seen", below=batch_id)
+            if seen is not None:
+                firsts = firsts.join(seen.select("th"), "th", "left_anti")
             stats = text_stats_frame(firsts).select("doc_id", "quality_score")
             langs = lang_id_frame(firsts).select("doc_id", "predicted_lang")
             kept = (
@@ -2210,34 +2186,13 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             # kept or filtered — a quality-rejected copy still makes
             # later duplicates drop, exactly like the batch operator's
             # window-then-filter order.
-            fused = kept.select(
-                F.lit("kept").alias("side"),
-                "doc_id",
-                "predicted_lang",
-                F.col("quality_score").cast("double").alias("quality_score"),
-                F.lit(None).cast("bigint").alias("th"),
-            ).unionByName(
-                firsts.select(
-                    F.lit("seen").alias("side"),
-                    F.lit(None).cast("bigint").alias("doc_id"),
-                    F.lit(None).cast("string").alias("predicted_lang"),
-                    F.lit(None).cast("double").alias("quality_score"),
-                    "th",
-                )
-            )
-            rows.write(batch_id, fused, by_side=True)
+            rows.write(batch_id, kept=kept, seen=firsts.select("th"))
         finally:
             batch.unpersist()
 
-    stream = file_stream(spark, stage, docs.schema, max_files_per_trigger=1)
-    run_batches(stream, _gate, name=name)
-    parts = rows.paths("kept")
-    if not parts:
-        return spark.createDataFrame(
-            [], "doc_id bigint, predicted_lang string, quality_score double"
-        )
-    return spark.read.parquet(*parts).select(
-        "doc_id", "predicted_lang", "quality_score"
+    run_batches(_drop_stream(docs, stage), _gate, name=name)
+    return rows.read_side(
+        "kept", "doc_id bigint, predicted_lang string, quality_score double"
     )
 
 
@@ -2348,7 +2303,7 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frolyk_spark.functions.hashing import portable_hash_spark_sql
     from frolyk_spark.operators.pipeline import _BUCKET_WIDTH, packed_offsets
     from frolyk_spark.operators.vocab import bpe_apply_kernel, persisted_bpe_merges
-    from frolyk_spark.sources.streams import file_stream, stage_keyed_file_drop
+    from frolyk_spark.sources.streams import stage_keyed_file_drop
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stage = stage_keyed_file_drop(
@@ -2360,7 +2315,7 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name, root = _run_root("tokfeed_")
     # end offset of the packed stream, one long per version
-    offsets = VersionedState(os.path.join(root, "offset"))
+    offsets = VersionedState(spark, os.path.join(root, "offset"))
 
     def _feed(batch_df: DataFrame, batch_id: int) -> None:
         words = batch_df.select(
@@ -2401,17 +2356,12 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("mod").alias("hi"),
                     F.count(F.lit(1)).alias("n"),
                 ).collect()
-                n = sum(r["n"] for r in stats)
-                if n and not all(
-                    r["lo"] == r["hi"] == batch_id % TOKFEED_PARTS
-                    for r in stats
-                ):
-                    lo = min(r["lo"] for r in stats)
-                    hi = max(r["hi"] for r in stats)
-                    raise RuntimeError(
-                        f"batch {batch_id} violated the content contract: "
-                        f"doc mods [{lo}..{hi}]"
-                    )
+                _check_batch_keys(
+                    batch_id,
+                    min((r["lo"] for r in stats), default=None),
+                    max((r["hi"] for r in stats), default=None),
+                    sum(r["n"] for r in stats), TOKFEED_PARTS, "content", "doc mods",
+                )
                 prior_v = offsets.prior(batch_id)
                 base = 0 if prior_v is None else offsets.scalar(prior_v)
                 packed, end = packed_offsets(
@@ -2428,8 +2378,7 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             words.unpersist()
 
-    stream = file_stream(spark, stage, docs.schema, max_files_per_trigger=1)
-    run_batches(stream, _feed, name=name)
+    run_batches(_drop_stream(docs, stage), _feed, name=name)
     packed_root = os.path.join(root, "packed")
     if not os.path.isdir(packed_root):
         return spark.createDataFrame(
@@ -2630,7 +2579,7 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume — and each batch reads only the LATEST prior state dir, so
     old batches never re-shuffle (the B17 posture).
     """
-    from frolyk_spark.sources.streams import file_stream, stage_keyed_file_drop
+    from frolyk_spark.sources.streams import stage_keyed_file_drop
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -2651,30 +2600,15 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name, root = _run_root("asofjoin_")
-    rows = VersionedState(os.path.join(root, "rows"), prefix="b")
+    rows = VersionedState(spark, os.path.join(root, "rows"), prefix="b")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.persist()
         try:
-            blo, bhi, n = batch.agg(
-                F.min(F.expr(range_key)),
-                F.max(F.expr(range_key)),
-                F.count(F.lit(1)),
-            ).collect()[0]
-            if n and not (blo == bhi == batch_id % ASOF_STREAM_PARTS):
-                raise RuntimeError(
-                    f"batch {batch_id} violated the range contract: "
-                    f"quarters [{blo}..{bhi}]"
-                )
-            prior_v = rows.prior(batch_id, "state")
-            if prior_v is not None:
-                state = spark.read.parquet(
-                    rows.path(prior_v, "state")
-                ).select("user_id", F.col("last_click_us").alias("st_click_us"))
-            else:
-                state = spark.createDataFrame(
-                    [], "user_id bigint, st_click_us bigint"
-                )
+            _check_batch(batch, batch_id, range_key, ASOF_STREAM_PARTS, "range", "quarters")
+            state = rows.read_prior(
+                batch_id, "user_id bigint, last_click_us bigint", side="state"
+            ).withColumnRenamed("last_click_us", "st_click_us")
             w = (
                 Window.partitionBy("user_id")
                 .orderBy("ts", "event_id")
@@ -2708,34 +2642,13 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.greatest("bc", "st_click_us").alias("last_click_us"),
                 )
             )
-            fused = out.select(
-                F.lit("out").alias("side"),
-                "event_id",
-                "user_id",
-                "ts_us",
-                "last_click_us",
-            ).unionByName(
-                new_state.select(
-                    F.lit("state").alias("side"),
-                    F.lit(None).cast("bigint").alias("event_id"),
-                    "user_id",
-                    F.lit(None).cast("bigint").alias("ts_us"),
-                    "last_click_us",
-                )
-            )
-            rows.write(batch_id, fused, by_side=True)
+            rows.write(batch_id, out=out, state=new_state)
         finally:
             batch.unpersist()
 
-    stream = file_stream(spark, stage, ev.schema, max_files_per_trigger=1)
-    run_batches(stream, _apply, name=name)
-    parts = rows.paths("out")
-    if not parts:
-        return spark.createDataFrame(
-            [], "event_id bigint, user_id bigint, ts_us bigint, last_click_us bigint"
-        )
-    return spark.read.parquet(*parts).select(
-        "event_id", "user_id", "ts_us", "last_click_us"
+    run_batches(_drop_stream(ev, stage), _apply, name=name)
+    return rows.read_side(
+        "out", "event_id bigint, user_id bigint, ts_us bigint, last_click_us bigint"
     )
 
 
@@ -2886,19 +2799,13 @@ def stream_edge_degrees(
     # sweep above reclaims tables whose owner died before its finally
     name, root = _run_root(f"edgemon{os.getpid()}x")
     rows_root = os.path.join(root, "rows")
-    rows = VersionedState(rows_root, prefix="b")
+    rows = VersionedState(spark, rows_root, prefix="b")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        lo, hi, n = batch_df.agg(
-            F.min(F.expr(f"l_orderkey % {EDGEMON_PARTS}")),
-            F.max(F.expr(f"l_orderkey % {EDGEMON_PARTS}")),
-            F.count(F.lit(1)),
-        ).collect()[0]
-        if n and not (lo == hi == batch_id % EDGEMON_PARTS):
-            raise RuntimeError(
-                f"batch {batch_id} violated the keyed-batch contract: "
-                f"residues [{lo}..{hi}]"
-            )
+        _check_batch(
+            batch_df, batch_id, f"l_orderkey % {EDGEMON_PARTS}", EDGEMON_PARTS,
+            "keyed-batch", "residues",
+        )
         pairs = basket_half_pairs(batch_df)
         # E21 cadence (r15): every EDGE_COMPACT_EVERY batches, roll the
         # sealed deltas STRICTLY BELOW this batch into the bucketed
@@ -2907,19 +2814,12 @@ def stream_edge_degrees(
         # this bounds the delta chain the keep-first anti-join reads to
         # the cadence length; the store side probes Exchange-free.
         if batch_id > 0 and batch_id % EDGE_COMPACT_EVERY == 0:
-            sealed_below = [
-                i for i in rows.versions(below=batch_id)
-                if os.path.exists(os.path.join(rows.path(i), "_SUCCESS"))
-            ]
-            has_edges = any(
-                os.path.isdir(rows.path(i, "edges")) for i in sealed_below
-            )
-            if sealed_below and has_edges:
+            if rows.versions(below=batch_id, side="edges", sealed=True):
                 compact_edge_store(
                     spark,
                     rows_root,
                     name,
-                    through_batch=max(sealed_below),
+                    through_batch=rows.versions(below=batch_id, sealed=True)[-1],
                     buckets=EDGE_STORE_BUCKETS,
                 )
         store, delta_df = _edge_store_parts(
@@ -2942,34 +2842,18 @@ def stream_edge_degrees(
                 .groupBy("part")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
             )
-            prior_v = rows.prior(batch_id, "degrees")
-            if prior_v is not None:
-                prior_deg = spark.read.parquet(
-                    rows.path(prior_v, "degrees")
-                ).select("part", F.col("degree").alias("d0"))
+            prior_deg = rows.read_prior(batch_id, side="degrees")
+            if prior_deg is not None:
                 zero = F.lit(0).cast("bigint")
-                deltas = prior_deg.join(deltas, "part", "full_outer").select(
+                deltas = prior_deg.select(
+                    "part", F.col("degree").alias("d0")
+                ).join(deltas, "part", "full_outer").select(
                     "part",
                     (F.coalesce("d0", zero) + F.coalesce("degree", zero)).alias(
                         "degree"
                     ),
                 )
-            fused = new_edges.select(
-                F.lit("edges").alias("side"),
-                "src",
-                "dst",
-                F.lit(None).cast("bigint").alias("part"),
-                F.lit(None).cast("bigint").alias("degree"),
-            ).unionByName(
-                deltas.select(
-                    F.lit("degrees").alias("side"),
-                    F.lit(None).cast("bigint").alias("src"),
-                    F.lit(None).cast("bigint").alias("dst"),
-                    F.col("part").cast("bigint").alias("part"),
-                    "degree",
-                )
-            )
-            rows.write(batch_id, fused, by_side=True)
+            rows.write(batch_id, edges=new_edges, degrees=deltas)
         finally:
             new_edges.unpersist()
 
@@ -2987,11 +2871,8 @@ def stream_edge_degrees(
             if os.path.exists(m):
                 os.remove(m)
 
-    v = rows.latest("degrees")
-    if v is None:
-        return spark.createDataFrame([], "part_key bigint, degree bigint")
     return (
-        spark.read.parquet(rows.path(v, "degrees"))
+        rows.read_latest("part bigint, degree bigint", side="degrees")
         .select(
             F.col("part").cast("bigint").alias("part_key"),
             F.col("degree").cast("bigint").alias("degree"),
@@ -3087,11 +2968,8 @@ def compact_edge_store(
     KEPT; only versions older than the previous watermark are dropped
     (VersionedState's retention-by-count posture). A reader
     holding a frame across TWO compaction cycles is out of contract."""
-    rows = VersionedState(rows_root, prefix="b")
-    sealed = [
-        i for i in rows.versions()
-        if os.path.exists(os.path.join(rows.path(i), "_SUCCESS"))
-    ]
+    rows = VersionedState(spark, rows_root, prefix="b")
+    sealed = rows.versions(sealed=True)
     if not sealed:
         raise ValueError(f"no sealed batch dirs under {rows_root}")
     # an overshooting watermark would silently exclude batches that land
@@ -3108,24 +2986,20 @@ def compact_edge_store(
             "sealed (_SUCCESS missing) — compacting past them would "
             "permanently exclude their edges from every read"
         )
-    dirs = [
-        rows.path(i, "edges") for i in sealed
-        if i <= through_batch and os.path.isdir(rows.path(i, "edges"))
+    rolled = [
+        i for i in rows.versions(side="edges", sealed=True) if i <= through_batch
     ]
-    if not dirs:
+    if not rolled:
         raise ValueError(
             f"no sealed side=edges dirs at or below batch {through_batch}"
         )
     from frolyk_spark.sources.catalog import write_bucketed
 
     marker = os.path.join(rows_root, "compacted_through.txt")
-    prev_through = -1
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            prev_through = int(fh.read().strip())
+    prev_through = _compacted_through(rows_root)
     versioned = f"{table_name}_t{through_batch}"
     store = write_bucketed(
-        spark.read.parquet(*dirs).select("src", "dst"),
+        rows.read(rolled, "src bigint, dst bigint", side="edges"),
         versioned,
         ["src", "dst"],
         buckets=buckets,
@@ -3148,6 +3022,15 @@ def compact_edge_store(
     return store
 
 
+def _compacted_through(rows_root: str) -> int:
+    """The published compaction watermark, or -1 before the first one."""
+    try:
+        with open(os.path.join(rows_root, "compacted_through.txt")) as fh:
+            return int(fh.read().strip())
+    except FileNotFoundError:
+        return -1
+
+
 def _edge_store_parts(
     spark: SparkSession,
     rows_root: str,
@@ -3166,20 +3049,16 @@ def _edge_store_parts(
     predecessors); a watermark AT or ABOVE it would mean the batch's
     earlier write was compacted and can no longer be excluded — raise,
     never double-count silently."""
-    marker = os.path.join(rows_root, "compacted_through.txt")
-    through = -1
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            through = int(fh.read().strip())
+    through = _compacted_through(rows_root)
     if exclude_batch is not None and through >= exclude_batch:
         raise RuntimeError(
             f"compaction watermark {through} has rolled up batch "
             f"{exclude_batch}, which must be excluded — the cadence may "
             "only compact strictly below the live batch"
         )
-    rows = VersionedState(rows_root, prefix="b")
+    rows = VersionedState(spark, rows_root, prefix="b")
     deltas = [
-        rows.path(v, "edges") for v in rows.versions(side="edges")
+        v for v in rows.versions(side="edges")
         if v > through and v != exclude_batch
     ]
     store = (
@@ -3188,7 +3067,7 @@ def _edge_store_parts(
         else None
     )
     delta_df = (
-        spark.read.parquet(*deltas).select("src", "dst") if deltas else None
+        rows.read(deltas, "src bigint, dst bigint", side="edges") if deltas else None
     )
     return store, delta_df
 
@@ -3205,13 +3084,11 @@ def read_edge_store(
     publishing is invisible here. (Whole-set readers union; the live
     probe uses _edge_store_parts to keep the store side bucketed.)"""
     store, deltas = _edge_store_parts(spark, rows_root, table_name)
-    parts = [p for p in (store, deltas) if p is not None]
-    if not parts:
-        return spark.createDataFrame([], "src bigint, dst bigint")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if store is None:
+        return deltas if deltas is not None else spark.createDataFrame(
+            [], "src bigint, dst bigint"
+        )
+    return store if deltas is None else store.unionByName(deltas)
 
 
 STREAM_EDGE_DEGREES_SQL = """
@@ -3298,21 +3175,15 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name, root = _run_root("ccmon_")
-    labels = VersionedState(root)
+    labels = VersionedState(spark, root)
     # the per-version converged flag (1/0) beside each label version
-    conv = VersionedState(root, prefix="conv_s")
+    conv = VersionedState(spark, root, prefix="conv_s")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        lo, hi, n = batch_df.agg(
-            F.min(F.expr(f"l_orderkey % {EDGEMON_PARTS}")),
-            F.max(F.expr(f"l_orderkey % {EDGEMON_PARTS}")),
-            F.count(F.lit(1)),
-        ).collect()[0]
-        if n and not (lo == hi == batch_id % EDGEMON_PARTS):
-            raise RuntimeError(
-                f"batch {batch_id} violated the keyed-batch contract: "
-                f"residues [{lo}..{hi}]"
-            )
+        _check_batch(
+            batch_df, batch_id, f"l_orderkey % {EDGEMON_PARTS}", EDGEMON_PARTS,
+            "keyed-batch", "residues",
+        )
         # cut: pairs feed two plan arms (the contracted-label join chain
         # and the endpoint set); the checkpoint is BATCH-sized — the full
         # label state is deliberately never checkpointed, because the
@@ -3333,7 +3204,7 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior_v = labels.prior(batch_id)
         prior_conv = True
         if prior_v is not None:
-            prior = spark.read.parquet(labels.path(prior_v))
+            prior = labels.read(prior_v)
             prior_conv = conv.scalar(prior_v) == 1
             # label(x) = stored label, or x itself for first-seen parts —
             # resolved by LEFT joins against the bare prior scan, so no
@@ -3387,17 +3258,10 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.write(batch_id, new_state)
         conv.write_scalar(batch_id, prior_conv and conv_b)
 
-    stream = _drop_stream(li, stage)
-    run_batches(stream, _apply, name=name)
+    run_batches(_drop_stream(li, stage), _apply, name=name)
     v = labels.latest()
-    if v is None:
-        return spark.createDataFrame(
-            [],
-            "part_key bigint, component_id bigint, is_canonical boolean, "
-            "component_size bigint, converged boolean",
-        )
-    final = spark.read.parquet(labels.path(v))
-    converged = conv.scalar(v) == 1
+    final = labels.read(v, "part bigint, label bigint")
+    converged = v is None or conv.scalar(v) == 1
     sizes = final.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("component_size")
     )

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from frolyk_spark.functions.lineage import cut_lineage
 from frolyk_spark.functions.loops import (
     LOOP_PARTITION_BYTES,
+    conf_span,
     fixed_plan_loop,
     loop_partitions,
 )
@@ -127,6 +128,22 @@ def test_fixed_plan_loop_restores_confs_on_error(spark):
             assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
             raise RuntimeError("boom")
     assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_conf_span_restores_set_and_unset_keys_on_error(spark):
+    """A key that was set gets its previous value back and a key that was
+    not set is unset again, also when the span raises."""
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.frolyk.test.unset"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError):
+        with conf_span(spark, {set_key: "3", unset_key: "x"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "x"
+            raise RuntimeError("boom")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    assert unset_key not in spark.conf.getAll
 
 
 def test_round_body_runs_one_exchange(spark):

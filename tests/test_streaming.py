@@ -739,11 +739,75 @@ def test_stream_cdc_apply_multibatch_equals_batch(spark, sf_dir):
     # run's own persisted versions — never itself, never a successor
     from frolyk_spark.streaming.jobs import VersionedState
 
-    state = VersionedState(root)
+    state = VersionedState(spark, root)
     assert state.versions() == versions
     assert state.prior(versions[0]) is None
     for prev, cur in zip(versions, versions[1:]):
         assert state.prior(cur) == prev, (prev, cur)
+
+
+def test_versioned_state_owns_the_side_layout(spark, tmp_path):
+    """VersionedState's store surface on a synthetic store: named sides
+    written in one job read back with their own columns (a column only
+    another side has reads as a typed null), a side present in only some
+    versions, prior strictly below the batch id, a redelivered id
+    overwriting its version, the named empty schema on an empty store,
+    and keep >= 2 retention."""
+    from frolyk_spark.streaming.jobs import VersionedState
+
+    st = VersionedState(spark, str(tmp_path / "rows"), prefix="b")
+    # empty store: the caller's schema, or None for a branching body
+    empty = st.read_side("pairs", "doc_a bigint, doc_b bigint")
+    assert empty.dtypes == [("doc_a", "bigint"), ("doc_b", "bigint")]
+    assert empty.count() == 0
+    assert st.read_latest() is None and st.read_prior(0, side="codes") is None
+    assert st.read_prior(0, "doc_id bigint").columns == ["doc_id"]
+
+    # disjoint (doc_a, doc_b / doc_id) and shared (score) columns
+    pairs = spark.createDataFrame([(1, 2, 7)], "doc_a bigint, doc_b bigint, score int")
+    codes = spark.createDataFrame([(1, 3), (2, 4)], "doc_id bigint, score int")
+    st.write(0, pairs=pairs, codes=codes)
+    st.write(1, codes=spark.createDataFrame([(5, 6)], "doc_id bigint, score int"))
+    raw = st.read(0, side="pairs")
+    assert dict(raw.dtypes) == {
+        "doc_a": "bigint", "doc_b": "bigint", "score": "int", "doc_id": "bigint",
+    }
+    assert [tuple(r) for r in raw.select("doc_a", "doc_b", "score", "doc_id").collect()] == [
+        (1, 2, 7, None)
+    ]
+    assert sorted(
+        tuple(r) for r in st.read(0, side="codes")
+        .select("doc_a", "doc_b", "score", "doc_id").collect()
+    ) == [(None, None, 3, 1), (None, None, 4, 2)]
+    assert st.read(0, "doc_id bigint, score int", side="codes").columns == ["doc_id", "score"]
+
+    # a side present in only some versions
+    assert st.versions(side="pairs") == [0] and st.versions(side="codes") == [0, 1]
+    assert st.versions(sealed=True) == [0, 1]
+    assert st.read_side("pairs", "doc_a bigint, doc_b bigint").count() == 1
+    assert sorted(r.doc_id for r in st.read_side("codes", "doc_id bigint").collect()) == [1, 2, 5]
+    assert st.read_latest("doc_a bigint", side="pairs").count() == 1
+
+    # prior reads strictly below the batch id, per side
+    assert st.prior(0) is None and st.prior(1) == 0 and st.prior(2) == 1
+    assert st.prior(2, "pairs") == 0
+    assert sorted(r.doc_id for r in st.read_side("codes", "doc_id bigint", below=1).collect()) == [1, 2]
+    assert [r.doc_id for r in st.read_prior(2, "doc_id bigint", side="codes").collect()] == [5]
+
+    # a redelivered id overwrites its own version, sides included
+    st.write(1, pairs=pairs, codes=spark.createDataFrame([(8, 9)], "doc_id bigint, score int"))
+    assert sorted(r.doc_id for r in st.read_side("codes", "doc_id bigint").collect()) == [1, 2, 8]
+    assert st.versions(side="pairs") == [0, 1]
+
+    # retention keeps the newest keep >= 2 versions; below 2 is refused
+    kept = VersionedState(spark, str(tmp_path / "kept"), keep=2)
+    for b in range(4):
+        kept.write(b, spark.range(b + 1))
+    assert kept.versions() == [2, 3]
+    assert kept.read_latest("id bigint").count() == 4
+    assert kept.read_prior(3, "id bigint").count() == 3
+    with pytest.raises(ValueError, match="keep_versions must be >= 2"):
+        VersionedState(spark, str(tmp_path / "bad"), keep=1)
 
 
 def test_cdc_merge_redelivery_idempotent(spark):
@@ -1578,48 +1642,49 @@ def test_stream_sample_weighted_matches_batch(spark, sf_dir):
     assert len(versions) >= 2
 
 
-def test_late_routing_contract_fails_loudly_on_reordered_files(spark, sf_dir, tmp_path):
-    """B25's oracle is only valid if file k really arrives as batch k; the
-    per-batch contract assertion is the guard. Corrupt a staged drop by
-    swapping two files' contents and prove the job DIES with the contract
-    error instead of silently producing oracle-divergent accounting."""
-    import shutil
+#: every keyed/range-batched operator and the contract its batches assert
+KEYED_BATCH_CONTRACTS = {
+    "stream_late_routing": "content contract",
+    "stream_token_feed": "content contract",
+    "stream_corpus_filter": "range contract",
+    "stream_asof_join": "range contract",
+    "stream_edge_degrees": "keyed-batch contract",
+    "stream_components": "keyed-batch contract",
+}
 
-    import pytest
 
-    from frolyk_spark.sources.catalog import load_table
-    from frolyk_spark.sources.streams import stage_keyed_file_drop
-    from frolyk_spark.streaming.jobs import LATE_PARTS, stream_late_routing
+@pytest.mark.parametrize("name", list(KEYED_BATCH_CONTRACTS))
+def test_keyed_batch_contract_fails_loudly_on_reordered_files(
+    name, spark, sf_dir, tmp_path, monkeypatch
+):
+    """A keyed/range-batched operator's oracle is only valid if file k
+    really arrives as batch k; the per-batch contract assertion is the
+    guard. Hand each operator a staged drop whose files 0 and 1 have
+    swapped contents and prove the job DIES with the contract error
+    instead of silently producing oracle-divergent output."""
+    from frolyk_spark.sources import streams
+    from frolyk_spark.streaming import jobs
 
-    fake_sf = tmp_path / "sf"
-    fake_sf.mkdir()
-    # COPY, never symlink: stage_keyed_file_drop keys on os.path.realpath,
-    # which would resolve a symlink back to the shared sf_dir and make the
-    # corrupted stage the exact dir every other B25 consumer reuses (a
-    # crash between swap and restore would poison cross-session state)
-    shutil.copyfile(
-        os.path.join(sf_dir, "events.parquet"), fake_sf / "events.parquet"
-    )
-    ev = load_table(spark, str(fake_sf), "events").select("event_id", "ts")
-    stage = stage_keyed_file_drop(
-        ev, str(fake_sf), "events", "latert", LATE_PARTS, "event_id"
-    )
-    f0, f1 = os.path.join(stage, "0000.parquet"), os.path.join(stage, "0001.parquet")
-    m0, m1 = os.path.getmtime(f0), os.path.getmtime(f1)
-    tmp = os.path.join(stage, ".swap")
-    shutil.move(f0, tmp); shutil.move(f1, f0); shutil.move(tmp, f1)
-    # keep the mtime ORDER pinned so the listing order is unchanged and
-    # only the CONTENT is wrong — exactly the desync the contract catches
-    os.utime(f0, (m0, m0)); os.utime(f1, (m1, m1))
-    try:
-        with pytest.raises(Exception, match="content contract"):
-            stream_late_routing(spark, str(fake_sf))
-    finally:
-        # restore anyway: the stage is keyed on the COPIED file under
-        # tmp_path (test-scoped by construction), but leave it coherent
-        # for any same-session reuse of this tmp dir
+    real = streams.stage_keyed_file_drop
+
+    def swapped(*args, **kw):
+        # a COPY of the (shared, cached) stage: corrupting the shared dir
+        # itself would poison every other consumer of that drop
+        stage = str(tmp_path / "stage")
+        shutil.copytree(real(*args, **kw), stage)
+        f0, f1 = (os.path.join(stage, f"000{k}.parquet") for k in (0, 1))
+        m0, m1 = os.path.getmtime(f0), os.path.getmtime(f1)
+        tmp = os.path.join(stage, ".swap")
         shutil.move(f0, tmp); shutil.move(f1, f0); shutil.move(tmp, f1)
+        # keep the mtime ORDER pinned so the listing order is unchanged
+        # and only the CONTENT is wrong — exactly the desync the
+        # contract catches
         os.utime(f0, (m0, m0)); os.utime(f1, (m1, m1))
+        return stage
+
+    monkeypatch.setattr(streams, "stage_keyed_file_drop", swapped)
+    with pytest.raises(Exception, match=KEYED_BATCH_CONTRACTS[name]):
+        jobs.QUERIES[name](spark, sf_dir)
 
 
 def test_stream_asof_join_equals_batch(spark, sf_dir):
